@@ -173,11 +173,6 @@ def dec(c) -> F.Column:
     return col.cast(DEC)
 
 
-def dsum(c, scale: int = 4) -> F.Column:
-    """Exact decimal sum rounded and emitted as double."""
-    return F.round(F.sum(dec(c)), scale).cast("double")
-
-
 def _t(sf_dir: str, name: str):
     """Shared closure-friendly loader."""
 

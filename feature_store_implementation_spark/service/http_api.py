@@ -220,8 +220,8 @@ def create_app(
         serving/vectors.py sync_online_snapshot): 200 with the sync
         report; 404 for an unknown snapshot; a ConflictError (400 in
         this facade's reference-parity mapping) when the snapshot needs
-        a re-export (legacy meta, version drift, unusable feed window,
-        churn past max_changed) — the same taxonomy as the export's
+        a re-export (version drift, unusable feed window, churn past
+        max_changed) — the same taxonomy as the export's
         conflict semantics."""
         path = _snap_path(name)
         if not os.path.exists(path):

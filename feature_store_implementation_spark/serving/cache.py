@@ -38,17 +38,25 @@ class FeatureCache:
 
     def get(self, key: str) -> Any | None:
         with self._lock:
+            value = self._peek(key)
+            if value is None:
+                self.misses += 1
+            else:
+                self.hits += 1
+            return value
+
+    def _peek(self, key: str) -> Any | None:
+        """``get`` without touching the hit/miss counters — for a second
+        probe inside one request that ``get`` already counted."""
+        with self._lock:
             item = self._data.get(key)
             if item is None:
-                self.misses += 1
                 return None
             expires, value = item
             if expires < time.monotonic():
                 del self._data[key]
-                self.misses += 1
                 return None
             self._data.move_to_end(key)
-            self.hits += 1
             return value
 
     def set(self, key: str, value: Any) -> None:

@@ -156,20 +156,15 @@ def read_online_snapshot(spark, path: str):
 
 
 def _snapshot_meta(path: str) -> dict:
-    meta_file = os.path.join(path, "_snapshot_meta.json")
-    if os.path.exists(meta_file):
-        with open(meta_file) as f:
+    """The export's ``_snapshot_meta.json`` (router shard count, version
+    selector, sync ledger). Every committed snapshot has one — the export
+    writes it before its commit rename — so its absence means there is no
+    snapshot at ``path``."""
+    try:
+        with open(os.path.join(path, "_snapshot_meta.json")) as f:
             return json.load(f)
-    # Meta-less back-compat (a pre-r9 export): the shard MODULUS is not
-    # recoverable from the layout — partitionBy writes no directory for
-    # an empty shard, so counting shard= dirs (or taking max+1) computes
-    # a wrong modulus whenever any shard came out empty, and the router
-    # then opens the wrong file and 404s entities the snapshot HOLDS.
-    # n_shards=None tells the lookup to fall back to scanning every
-    # shard file — slower, but never wrong.
-    if not any(d.startswith("shard=") for d in os.listdir(path)):
-        raise FileNotFoundError(f"no online snapshot at {path}")
-    return {"n_shards": None, "version": None}
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no online snapshot at {path}") from None
 
 
 def lookup_online_snapshot(
@@ -194,24 +189,15 @@ def lookup_online_snapshot(
     # probe the same way snapshot_shard does, so a numeric id from a JSON
     # body probes instead of raising an Arrow type error
     probe = str(entity_id)
-    if meta["n_shards"] is not None:
-        shard_dirs = [os.path.join(path, f"shard={snapshot_shard(entity_id, meta['n_shards'])}")]
-    else:  # meta-less export: modulus unknown — scan every shard
-        shard_dirs = sorted(
-            os.path.join(path, d)
-            for d in os.listdir(path)
-            if d.startswith("shard=")
-        )
-    table = None
-    for shard_dir in shard_dirs:
-        live = shard_live_files(shard_dir)
-        if not live:
-            continue
-        dataset = ds.dataset(live, format="parquet")
-        table = dataset.to_table(filter=ds.field("entity_id") == probe)
-        if table.num_rows:
-            break
-    if table is None or table.num_rows == 0:
+    live = shard_live_files(
+        os.path.join(path, f"shard={snapshot_shard(probe, meta['n_shards'])}")
+    )
+    if not live:  # partitionBy writes no directory for an empty shard
+        raise KeyError(f"entity '{entity_id}' not in snapshot")
+    table = ds.dataset(live, format="parquet").to_table(
+        filter=ds.field("entity_id") == probe
+    )
+    if table.num_rows == 0:
         raise KeyError(f"entity '{entity_id}' not in snapshot")
     row = table.to_pylist()[0]
     row.pop("shard", None)
@@ -225,8 +211,6 @@ def lookup_online_snapshot(
     # VALUE is null is distinct: the export preserves it as the codec
     # string "null" (serve_matrix preserve_stored_nulls), which decodes
     # to None below and stays in the vector, exactly like serve_vector.
-    # (Snapshots exported before the preservation flag conflate the two;
-    # their stored nulls read as missing.)
     row = {k: v for k, v in row.items() if v is not None}
     if not row:
         raise KeyError(f"entity '{entity_id}' holds no features for this request")
@@ -236,6 +220,6 @@ def lookup_online_snapshot(
     return FeatureVector(
         entity_id=eid,
         features=row,
-        version=meta.get("version"),
+        version=meta["version"],
         retrieved_at=datetime.now(timezone.utc).isoformat(),
     )

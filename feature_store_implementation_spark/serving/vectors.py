@@ -20,7 +20,6 @@ the named version ids before the scan."""
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
@@ -52,22 +51,15 @@ class FeatureStore:
     # (see export_online_snapshot). Sized generously above any plausible
     # export wall time — debris costs only disk until then.
     STAGING_SWEEP_AGE_S = 24 * 3600
-    # consumed-segment-ledger pruning horizon (sync_online_snapshot): a
-    # segment whose committed_at sits this far below the newest observed
-    # commit is presumed fully visible (capture→rename in _commit_segment
-    # is one fsync'd JSON write, and 10 min dwarfs any sane NTP skew
-    # between writers), so it can be folded into the ledger's floor and
-    # dropped from the explicit id list — keeping the ledger O(recent
-    # commits), not O(all commits ever), at 100 TB append rates.
-    FEED_LEDGER_LAG_S = 600.0
-    # seq-keyed ledger margin (round-12): segments carry a store-wide
-    # monotone commit seq allocated under a lock held across the
-    # publishing rename, so visibility order equals seq order and the
-    # seq floor can advance to (max consumed seq − this margin) with NO
-    # clock involved. The margin exists solely for the lease-takeover
-    # double fault (a writer stalled ≥ the 300 s lease TTL mid-commit
-    # publishing an old seq late): that writer's commit stays pending
-    # unless ≥ this many commits landed store-wide during its stall.
+    # consumed-segment-ledger margin (sync_online_snapshot): segments carry
+    # a store-wide monotone commit seq allocated under a lock held across
+    # the publishing rename, so visibility order equals seq order and the
+    # ledger's seq floor can advance to (max consumed seq − this margin)
+    # with NO clock involved — keeping the explicit id list O(recent
+    # commits), not O(all commits ever). The margin exists solely for the
+    # lease-takeover double fault (a writer stalled ≥ the 300 s lease TTL
+    # mid-commit publishing an old seq late): that writer's commit stays
+    # pending unless ≥ this many commits landed store-wide during its stall.
     FEED_LEDGER_SEQ_LAG = 1024
 
     def __init__(self, spark: SparkSession, root: str, cache: FeatureCache | None = None):
@@ -189,11 +181,11 @@ class FeatureStore:
         created-pending before but activated after, is excluded too) are
         invisible, so a later-activated v2 cannot hijack latest-per-feature
         and turn a reproduced export's column all-NULL (its value segments
-        would be filtered by the storage snapshot anyway). Rows predating
-        the activated_at field coalesce to computed_at; rows with NEITHER
-        timestamp stay visible — the segment layer's policy for missing
-        committed_at (always-visible beats silently dropping a feature
-        from a replayed export). Deprecation after the instant is not
+        would be filtered by the storage snapshot anyway). Rows without
+        activated_at (a version that went pending → deprecated) coalesce
+        to computed_at; rows with NEITHER timestamp stay visible
+        (always-visible beats silently dropping a feature from a replayed
+        export). Deprecation after the instant is not
         reconstructed — status transitions other than activation are not
         timestamped in the catalog."""
         versions = self.catalog.df(self.spark, "feature_versions")
@@ -272,8 +264,9 @@ class FeatureStore:
         version: str | None,
     ) -> FeatureVector:
         # re-probe under the flight: a follower that lost the race AFTER
-        # the leader filled the cache must not recompute
-        cached = self.cache.get(key)
+        # the leader filled the cache must not recompute. serve_vector's
+        # probe already counted this request's hit or miss.
+        cached = self.cache._peek(key)
         if cached is not None:
             return cached
 
@@ -438,9 +431,8 @@ class FeatureStore:
 
         # pin the export to ONE instant even when the caller gave none:
         # values committed while the export job runs are then cleanly "the
-        # next sync's window" instead of maybe-included — and the recorded
-        # instant is what sync_online_snapshot feeds the change feed as
-        # `since`
+        # next sync's work" (absent from the ledger below) instead of
+        # maybe-included
         pin = self.store._as_of_seconds(as_of) if as_of is not None else _time.time()
         resolved = self._resolved_versions(version, as_of=pin)
         if feature_names:
@@ -456,23 +448,19 @@ class FeatureStore:
         # (later) listing is a superset, so every ledgered segment is
         # guaranteed IN the data; a segment the matrix saw but the ledger
         # missed is merely re-upserted by the first sync (idempotent).
-        # floor=0 with the full visible id list ON PURPOSE (a timestamp
-        # floor here was tried and reverted in review r11: it presumes
-        # consumption by STAMP, so a backdated-stamp commit landing after
-        # the export would be silently skipped — the ledger's no-loss
-        # contract only holds when the export's consumed set is exactly
-        # what it observed). Cost is bounded and transient: the list
-        # mirrors the segment listing the export walks anyway (O(segment
-        # retention) — vacuum bounds it), and the FIRST sync's floor
-        # advance folds and prunes it back to O(recent commits).
+        # seq_floor=0 with the full visible id list ON PURPOSE: the
+        # ledger's no-loss contract only holds when the export's consumed
+        # set is exactly what it observed. Cost is bounded and transient:
+        # the list mirrors the segment listing the export walks anyway, and
+        # the FIRST sync's seq-floor advance prunes it back to O(recent
+        # commits).
         consumed = {
             str(v): {
-                "floor": 0.0,
                 "seq_floor": 0,
                 "segments": sorted(
                     seg
                     for seg, doc in self.store._feed_segments(v).items()
-                    if float(doc.get("committed_at", 0.0)) <= pin
+                    if doc["committed_at"] <= pin
                 ),
             }
             for v in vids
@@ -500,10 +488,9 @@ class FeatureStore:
                 .parquet(staging)
             )
             # meta is the LAST artifact before commit: fsynced so the
-            # renamed-in dir can never hold a torn file —
-            # lookup_online_snapshot's meta-less scan fallback only
-            # triggers when the file is ABSENT, so a torn one would brick
-            # every point read with a JSONDecodeError
+            # renamed-in dir can never hold a torn file — every point read
+            # routes through it, so a torn one would brick them all with a
+            # JSONDecodeError
             tmp = _os.path.join(staging, ".snapshot_meta.tmp")
             with open(tmp, "w") as f:
                 _json.dump(
@@ -511,11 +498,11 @@ class FeatureStore:
                         "n_shards": int(n_shards),
                         "version": version,
                         # the incremental-sync contract (sync_online_snapshot):
-                        # the pinned export instant (the first sync window's
-                        # `since`), the names filter, and the resolved version
-                        # ids (sync refuses on resolution drift — a feature
-                        # whose backing version changed needs a re-export,
-                        # not a row patch)
+                        # the names filter, the resolved version ids (sync
+                        # refuses on resolution drift — a feature whose
+                        # backing version changed needs a re-export, not a
+                        # row patch) and the consumed-segment ledger;
+                        # exported_at records the pinned instant
                         "exported_at": float(pin),
                         "feature_names": list(feature_names) if feature_names else None,
                         "feature_version_ids": [int(v) for v in vids],
@@ -557,8 +544,8 @@ class FeatureStore:
         """ONE idempotent scheduled-maintenance call for the online
         serving tier (the :func:`~..pipelines.pretraining.maintain_corpus`
         discipline applied to snapshots): try the O(changed) incremental
-        sync; when the snapshot cannot be patched — legacy meta, version
-        resolution drift, a restore/vacuum hole in the feed, churn past
+        sync; when the snapshot cannot be patched — version resolution
+        drift, a restore/vacuum hole in the feed, churn past
         ``max_changed``, or no snapshot at all yet — fall back to a FULL
         re-export, staged and swapped in (old dir renamed aside, new
         renamed in, old removed), so the caller never decides which mode
@@ -638,18 +625,13 @@ class FeatureStore:
                     return {"mode": "contended", "reason": str(exc)}
                 except ValueError as exc:
                     reason = str(exc)
-                try:
-                    meta = _snapshot_meta(final)
-                except FileNotFoundError:
-                    meta = {}
-                if n_shards is None:
-                    n_shards = int(meta.get("n_shards") or 16)
+                meta = _snapshot_meta(final)
                 rebuild = f"{final}.rebuild-{_uuid.uuid4().hex[:8]}"
                 rows = self.export_online_snapshot(
                     rebuild,
-                    n_shards=n_shards,
-                    feature_names=meta.get("feature_names"),
-                    version=meta.get("version"),  # keep the original selector
+                    n_shards=n_shards or meta["n_shards"],
+                    feature_names=meta["feature_names"],
+                    version=meta["version"],  # keep the original selector
                 )
                 trash = f"{final}.retired-{_uuid.uuid4().hex[:8]}"
                 _os.rename(final, trash)
@@ -685,11 +667,10 @@ class FeatureStore:
         shard — the erasure propagates to the serving tier in the same
         pass.
 
-        Refuses — with re-export guidance — when the snapshot predates
-        the sync metadata, when version resolution has drifted since the
-        export (a feature's backing version changed: every row is
-        potentially stale, a patch would lie), when the feed window
-        contains a RESTORE or vacuumed files, or when more than
+        Refuses — with re-export guidance — when version resolution has
+        drifted since the export (a feature's backing version changed:
+        every row is potentially stale, a patch would lie), when the feed
+        window contains a RESTORE or vacuumed files, or when more than
         ``max_changed`` entities moved (at that churn a bulk re-export
         is cheaper than a point-patch storm). Returns
         ``{"changed_entities", "shards_rewritten", "rows_upserted",
@@ -710,17 +691,11 @@ class FeatureStore:
         )
 
         final = path.rstrip("/")
-        meta = _snapshot_meta(final)
-        if meta.get("exported_at") is None or meta.get("feature_version_ids") is None:
-            raise ValueError(
-                "snapshot predates incremental sync metadata (pre-round-10 "
-                "export) — re-export it once with export_online_snapshot"
-            )
         with _pid_lock(_os.path.join(final, ".sync.lock"), "online snapshot sync"):
-            meta = _snapshot_meta(final)  # re-read under the lock
+            meta = _snapshot_meta(final)
             now = _time.time()
-            resolved = self._resolved_versions(meta.get("version"), as_of=now)
-            if meta.get("feature_names"):
+            resolved = self._resolved_versions(meta["version"], as_of=now)
+            if meta["feature_names"]:
                 resolved = resolved.filter(
                     F.col("feature_name").isin(meta["feature_names"])
                 )
@@ -737,64 +712,37 @@ class FeatureStore:
                     "is potentially stale — re-export the snapshot"
                 )
             # CONSUMED-SEGMENT LEDGER (not a timestamp window): each vid's
-            # ledger is (seq_floor, floor, explicit ids). A commit is
-            # consumed iff
-            #   seq-bearing (round-12 stores): seq <= seq_floor OR id listed
-            #   legacy (no seq):  committed_at <= floor OR id listed.
-            # Pending = every VISIBLE commit that is neither; a commit
-            # that publishes late is simply absent from this round's
-            # listing and consumed the round it appears (ADVICE r10).
+            # ledger is (seq_floor, explicit ids), and a commit is consumed
+            # iff seq <= seq_floor OR its id is listed. Pending = every
+            # VISIBLE commit that is neither; a commit that publishes late
+            # is simply absent from this round's listing and consumed the
+            # round it appears.
             #
-            # The SEQ floor is clock-free (r11 verdict task 4, closing the
-            # cross-writer skew residual): seqs are allocated under a lock
-            # held across the publishing rename, so visibility order
-            # equals seq order regardless of any writer's wall clock; the
-            # floor advances to (max consumed seq − FEED_LEDGER_SEQ_LAG),
-            # never past a visible-but-unconsumed commit. The only way a
-            # commit can land below the seq floor unconsumed is the
-            # lease-takeover double fault (writer stalled ≥ the 300 s
-            # lease TTL mid-commit while ≥ SEQ_LAG commits landed
-            # store-wide) — strictly narrower than any clock assumption.
+            # The seq floor is clock-free: seqs are allocated under a lock
+            # held across the publishing rename, so visibility order equals
+            # seq order regardless of any writer's wall clock; the floor
+            # advances to (max consumed seq − FEED_LEDGER_SEQ_LAG), never
+            # past a visible-but-unconsumed commit. The only way a commit
+            # can land below the seq floor unconsumed is the lease-takeover
+            # double fault (writer stalled ≥ the 300 s lease TTL mid-commit
+            # while ≥ SEQ_LAG commits landed store-wide).
             #
-            # The TIMESTAMP floor remains only for legacy (pre-seq)
-            # segments, whose population is frozen at upgrade time; its
-            # old soundness argument (PUBLISH_RESTAMP_S = lag/2 re-stamp,
-            # NTP within lag/2) still applies to them. Commits stamped
-            # after `now` stay pending either way: the fresh matrix below
-            # reads as_of=now (keyed on committed_at), so consuming them
-            # here would ledger data the read can't see. Pre-round-11
-            # snapshots carry no ledger; their synced_at/exported_at
-            # instant bootstraps the legacy floor, and seq_floor starts
-            # at 0 — seq-bearing commits the old snapshot already covered
-            # are re-upserted once (idempotent), never skipped.
-            ledger: dict = meta.get("consumed_segments") or {
-                str(v): {
-                    "floor": float(meta.get("synced_at") or meta["exported_at"]),
-                    "seq_floor": 0,
-                    "segments": [],
-                }
-                for v in vids_now
-            }
+            # Commits stamped after `now` stay pending: the fresh matrix
+            # below reads as_of=now (keyed on committed_at), so consuming
+            # them here would ledger data the read can't see.
             changed: set[str] = set()
             new_ledger: dict = {}
             for vid in vids_now:
-                ent = ledger.get(str(vid)) or {"floor": 0.0, "segments": []}
-                floor = float(ent.get("floor", 0.0))
-                seq_floor = int(ent.get("seq_floor", 0))
-                done = set(ent.get("segments") or [])
+                ent = meta["consumed_segments"][str(vid)]
+                seq_floor = ent["seq_floor"]
+                done = set(ent["segments"])
                 listing = self.store._feed_segments(vid)
-                ts_of = {
-                    s: float(d.get("committed_at", 0.0)) for s, d in listing.items()
-                }
-                seq_of = {s: int(d.get("seq", 0)) for s, d in listing.items()}
-
-                def _consumed(s: str) -> bool:
-                    if seq_of[s] > 0:
-                        return seq_of[s] <= seq_floor or s in done
-                    return ts_of[s] <= floor or s in done
-
+                ts_of = {s: d["committed_at"] for s, d in listing.items()}
+                seq_of = {s: d["seq"] for s, d in listing.items()}
                 pending = sorted(
-                    s for s in listing if ts_of[s] <= now and not _consumed(s)
+                    s
+                    for s in listing
+                    if ts_of[s] <= now and seq_of[s] > seq_floor and s not in done
                 )
                 if pending:
                     try:
@@ -815,39 +763,27 @@ class FeatureStore:
                             "heavy is cheaper as a bulk re-export"
                         )
                 # fold everything observed (<= now) into the ledger, then
-                # advance both floors and drop the ids they imply — the
+                # advance the seq floor and drop the ids it implies — the
                 # ledger stays O(recent commits)
                 observed = {s for s, ts in ts_of.items() if ts <= now}
                 all_done = done | observed
-                legacy_obs = [ts_of[s] for s in observed if seq_of[s] == 0]
-                new_floor = max(
-                    floor,
-                    max(legacy_obs, default=floor) - self.FEED_LEDGER_LAG_S,
-                )
-                seq_obs = [seq_of[s] for s in observed if seq_of[s] > 0]
                 # never advance past a visible commit left unconsumed this
                 # round (stamped after `now` — a writer clock running
                 # ahead): it must stay pending for a future sync
-                unconsumed = [
-                    seq_of[s]
-                    for s in listing
-                    if seq_of[s] > 0 and s not in all_done
-                ]
-                cand = max(seq_obs, default=seq_floor) - self.FEED_LEDGER_SEQ_LAG
+                unconsumed = [seq_of[s] for s in listing if s not in all_done]
+                cand = (
+                    max((seq_of[s] for s in observed), default=seq_floor)
+                    - self.FEED_LEDGER_SEQ_LAG
+                )
                 new_seq_floor = max(
                     seq_floor, min([cand] + [q - 1 for q in unconsumed])
                 )
                 new_ledger[str(vid)] = {
-                    "floor": new_floor,
                     "seq_floor": new_seq_floor,
                     "segments": sorted(
                         s
                         for s in all_done
-                        if (
-                            seq_of.get(s, 0) > new_seq_floor
-                            if seq_of.get(s, 0) > 0
-                            else ts_of.get(s, new_floor + 1.0) > new_floor
-                        )
+                        if s not in seq_of or seq_of[s] > new_seq_floor
                     ),
                 }
             if not changed:
@@ -869,7 +805,7 @@ class FeatureStore:
                     "synced_through": now,
                 }
 
-            n_shards = int(meta["n_shards"])
+            n_shards = meta["n_shards"]
             shards = sorted({snapshot_shard(e, n_shards) for e in changed})
             changed_df = F.broadcast(
                 self.spark.createDataFrame(
@@ -882,8 +818,8 @@ class FeatureStore:
             # so they row-filter via the broadcast semi-join instead
             prune = sorted(changed) if len(changed) <= 1000 else None
             fresh = self.serve_matrix(
-                meta.get("feature_names"),
-                meta.get("version"),
+                meta["feature_names"],
+                meta["version"],
                 as_of=now,
                 preserve_stored_nulls=True,
                 entity_ids=prune,
@@ -980,6 +916,3 @@ class FeatureStore:
 
     def feature_versions(self, feature_id: int):
         return self.catalog.list_versions(feature_id)
-
-    def version_metadata_json(self, version_id: int) -> str:
-        return json.dumps(self.catalog.get_version(version_id).version_metadata)

@@ -140,13 +140,6 @@ def compact_incremental_feature(
     import uuid
 
     vid = int(version_id)
-    # pre-manifest stores must be migrated BEFORE the snapshot (same as
-    # compact_version_partition): otherwise _read_segments returns {},
-    # the merged segment is built from nothing, and committing it makes
-    # every legacy plain-named data file permanently invisible — the
-    # exact "upgrading silently drops data" failure the segment
-    # protocol's legacy fallback exists to prevent
-    store._migrate_legacy_store()
     os.makedirs(store._segment_dir(vid), exist_ok=True)
     lock = os.path.join(store._segment_dir(vid), ".compact.lock")
     _lock = ExitStack()
@@ -199,7 +192,15 @@ def compact_incremental_feature(
             # JSON but loses the renames would leave the version
             # unreadable, not merely stale
             _fsync_path(dst_dir)
-            store._commit_segment(vid, new_rel, supersedes=list(snapshot), name=txn)
+            # "merge": the rows themselves change (partials -> one merged
+            # state), so the change feed diffs it against the snapshot
+            store._commit_segment(
+                vid,
+                new_rel,
+                cdc={"op": "merge"},
+                supersedes=list(snapshot),
+                name=txn,
+            )
         finally:
             shutil.rmtree(tmp_root, ignore_errors=True)
     finally:

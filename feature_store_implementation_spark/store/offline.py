@@ -47,15 +47,22 @@ Spark-first design:
   analog of the reference's idx_entity_feature (models.py:78-80), held
   through compaction by ``repartitionByRange``.
 
-Format migration: two older layouts remain readable. (1) the round-6
-single-file manifest ``_manifests/v{id}.json`` is treated as one pseudo-
-segment (id ``__root__``) and participates in supersedes like any other;
-(2) a pre-manifest store (plain Spark ``part-*.parquet`` files, no
-``_manifests`` at all) is read as fully committed — those files could only
-exist via the old writer's direct append — and is migrated to explicit
-``legacy`` segments on the first write, so upgrading never silently drops
-data (un-prefixed file names distinguish it from a crashed new-format
-first write, whose files carry a 12-hex txn prefix and stay invisible).
+Segment record format (the only one readers accept): each
+``_manifests/v{id}/{segment}.json`` holds
+
+- ``files`` — the data files this commit references, relative to the store;
+- ``entity_ranges`` — per-file entity_id [min, max] (files whose footer had
+  no usable stats are absent and never pruned);
+- ``row_counts`` — per-file row counts (same omission rule);
+- ``committed_at`` — unix seconds, captured just before the publishing
+  rename;
+- ``seq`` — the store-wide monotone commit number (≥ 1);
+- ``cdc.op`` — what kind of commit it was: ``append`` (``write_values``),
+  ``delete`` (``delete_rows``, with ``cdc.change_files``), ``compact``
+  (``compact_version_partition``), ``restore`` (``restore_version``) or
+  ``merge`` (``compact_incremental_feature`` in ``store/materialize.py``);
+- ``supersedes`` — the segment ids a ``delete``, ``compact``, ``restore``
+  or ``merge`` retires.
 """
 
 from __future__ import annotations
@@ -84,20 +91,15 @@ VALUES_SCHEMA = T.StructType(
 # on-disk file schema: the partition column lives in the directory name
 _FILE_SCHEMA = T.StructType([f for f in VALUES_SCHEMA.fields if f.name != "feature_version_id"])
 
-# new-format data files are "{12-hex txn}-part-*.parquet"; plain "part-*"
-# names can only come from the pre-manifest writer's direct append
-_TXN_FILE_RE = re.compile(r"^[0-9a-f]{12}-part-.*\.parquet$")
 
-
-def _partition_version_ids(path: str) -> list[int]:
-    """Version ids present as partition directories (integer-strict — a
-    stray ``feature_version_id=8.tmp`` is not a partition)."""
-    vids = []
-    for part in glob.glob(os.path.join(path, "feature_version_id=*")):
-        suffix = os.path.basename(part).split("=", 1)[1]
-        if suffix.isdigit() and os.path.isdir(part):
-            vids.append(int(suffix))
-    return sorted(vids)
+def _live_segments(segs: dict[str, dict], as_of: float | None = None) -> dict[str, dict]:
+    """The LIVE subset of a version's segment records: those committed at
+    or before ``as_of`` (all when None), minus any named in another
+    visible segment's ``supersedes`` list."""
+    if as_of is not None:
+        segs = {k: v for k, v in segs.items() if v["committed_at"] <= as_of}
+    superseded = {s for v in segs.values() for s in v.get("supersedes", [])}
+    return {k: v for k, v in segs.items() if k not in superseded}
 
 
 def _fsync_path(path: str) -> None:
@@ -138,9 +140,8 @@ LOCK_HEARTBEAT_S = 15.0
 LOCK_LEASE_TTL_S = 300.0
 
 # _commit_segment re-stamps committed_at when the capture->rename gap
-# exceeded this (half the serving ledger's FEED_LEDGER_LAG_S, so a
-# re-stamped commit always lands above any floor the stalled stamp could
-# have fallen behind)
+# exceeded this, so a timestamp window that closed during the stall still
+# sees the commit in its next window
 PUBLISH_RESTAMP_S = 300.0
 
 
@@ -328,16 +329,10 @@ class OfflineStore:
         upsert sink) must treat that exactly like an empty store.
 
         Short-circuits on the FIRST version with committed files: this
-        runs on every UNCACHED serve, and the full `_committed_versions`
-        walk parses every segment JSON of every version — O(store
-        metadata) driver I/O per cold request on a store with thousands
-        of versions."""
-        ids = self._manifest_version_ids()
-        if ids is None:  # pre-manifest store
-            return any(
-                self._legacy_plain_files(v) for v in _partition_version_ids(self.path)
-            )
-        return any(self._manifest_files(vid) for vid in ids)
+        runs on every UNCACHED serve, and a full walk parses every segment
+        JSON of every version — O(store metadata) driver I/O per cold
+        request on a store with thousands of versions."""
+        return any(self._manifest_files(vid) for vid in self._manifest_version_ids())
 
     # -- manifest-segment protocol ------------------------------------------
 
@@ -350,85 +345,32 @@ class OfflineStore:
     def _read_segments(
         self, version_id: int, as_of: float | None = None
     ) -> dict[str, dict]:
-        """All LIVE segments for one version: the round-6 single-file
-        manifest (as pseudo-segment ``__root__``) plus every per-append
-        segment, minus any segment named in another segment's
-        ``supersedes`` list (how compaction retires what it replaced).
+        """All LIVE segments for one version: every segment record minus
+        any segment named in another segment's ``supersedes`` list (how
+        compaction retires what it replaced).
 
         ``as_of`` (unix seconds) gives the SNAPSHOT view: only segments
         committed at or before that instant participate — including in
         supersedes resolution, so a compaction committed after the
-        snapshot does not retire what the snapshot saw. Segments from
-        before the ``committed_at`` field existed sort as time 0 (always
-        visible). Superseded segment records are never deleted, so
-        snapshots stay resolvable until ``vacuum_orphans`` removes the
-        compacted-away DATA files (age-gated) — the same time-travel
-        lifetime contract as Delta's VACUUM."""
-        vid = int(version_id)
-        segs: dict[str, dict] = {}
-        try:
-            with open(os.path.join(self._manifest_dir(), f"v{vid}.json")) as f:
-                segs["__root__"] = json.load(f)
-        except FileNotFoundError:
-            pass
-        try:
-            names = os.listdir(self._segment_dir(vid))
-        except FileNotFoundError:
-            names = []
-        for n in names:
-            if not n.endswith(".json"):
-                continue  # tmp files pre-rename are "*.json.tmp-*"
-            try:
-                with open(os.path.join(self._segment_dir(vid), n)) as f:
-                    segs[n[:-5]] = json.load(f)
-            except FileNotFoundError:
-                pass  # GC'd between listdir and open — it was superseded
-        if as_of is not None:
-            segs = {
-                k: v
-                for k, v in segs.items()
-                if float(v.get("committed_at", 0.0)) <= as_of
-            }
-        superseded: set[str] = set()
-        for s in segs.values():
-            superseded.update(s.get("supersedes", []))
-        return {k: v for k, v in segs.items() if k not in superseded}
-
-    def _legacy_plain_files(self, version_id: int) -> list[str]:
-        """Pre-manifest data files for one version: plain Spark
-        ``part-*.parquet`` names (a crashed NEW-format writer's orphans are
-        txn-prefixed and never match)."""
-        part_rel = f"feature_version_id={int(version_id)}"
-        part_dir = os.path.join(self.path, part_rel)
-        try:
-            names = os.listdir(part_dir)
-        except FileNotFoundError:
-            return []
-        return [
-            f"{part_rel}/{n}"
-            for n in names
-            if n.startswith("part-") and n.endswith(".parquet") and not _TXN_FILE_RE.match(n)
-        ]
+        snapshot does not retire what the snapshot saw. Superseded
+        segment records are never deleted, so snapshots stay resolvable
+        until ``vacuum_orphans`` removes the compacted-away DATA files
+        (age-gated) — the same time-travel lifetime contract as Delta's
+        VACUUM."""
+        return _live_segments(self._feed_segments(version_id), as_of)
 
     def _manifest_files(
         self, version_id: int, entity_ids: list[str] | None = None
     ) -> list[str]:
         """Relative paths of the COMMITTED files for one version: union of
-        its live segments (empty if the version has never committed). On a
-        store with no ``_manifests`` at all, plain-named files are the old
-        format's committed data (read-side migration fallback).
+        its live segments (empty if the version has never committed).
 
         ``entity_ids`` enables MANIFEST-LEVEL file skipping: a file is
         dropped when its segment's recorded ``entity_ranges`` prove no
         requested entity can be in it. Files without a recorded range
-        (legacy segments, stat-less footers) are always kept, so pruning
-        never changes results — only how many files the scan opens."""
-        segs = self._read_segments(version_id)
-        if segs:
-            return self._prune_segment_files(segs, entity_ids)
-        if not os.path.isdir(self._manifest_dir()):
-            return sorted(self._legacy_plain_files(version_id))
-        return []
+        (stat-less footers) are always kept, so pruning never changes
+        results — only how many files the scan opens."""
+        return self._prune_segment_files(self._read_segments(version_id), entity_ids)
 
     @staticmethod
     def _prune_segment_files(
@@ -513,9 +455,9 @@ class OfflineStore:
         self,
         version_id: int,
         files: list[str],
+        cdc: dict,
         supersedes: list[str] | None = None,
         name: str | None = None,
-        cdc: dict | None = None,
     ) -> str:
         """The commit point: tmp-write + fsync + atomic rename of a NEW
         segment file. Nothing is read-modified-written, so concurrent
@@ -531,8 +473,7 @@ class OfflineStore:
         AND the publishing rename, so among commits that ever become
         visible, visibility order equals seq order — independent of any
         writer's wall clock. The incremental-sync ledger keys consumed-ness
-        on seq for seq-bearing segments, which closes the cross-writer
-        clock-skew loss mode the timestamp floor had (r11 verdict task 4).
+        on seq, so no writer's clock skew can make it skip a commit.
         A crash between counter persist and rename burns a seq (a
         permanent hole — the replayed txn allocates a fresh one); holes
         are harmless because nothing ever waits on a specific seq. The
@@ -563,13 +504,11 @@ class OfflineStore:
         doc["committed_at"] = time.time()
         if supersedes:
             doc["supersedes"] = sorted(supersedes)
-        if cdc:
-            # change-data-feed record: what KIND of commit this was
-            # ("append" | "delete" | "compact" | "restore") plus, for
-            # deletes, the sidecar change files holding the removed rows —
-            # see changes_for_version. Absent on pre-round-10 segments
-            # (the feed falls back to a file diff for those).
-            doc["cdc"] = cdc
+        # change-data-feed record: what KIND of commit this was ("append" |
+        # "delete" | "compact" | "restore" | "merge") plus, for deletes, the
+        # sidecar change files holding the removed rows — see
+        # changes_for_version
+        doc["cdc"] = cdc
         final = os.path.join(seg_dir, f"{seg_id}.json")
         # seq allocation and the publishing rename share one leased lock
         # span: that is what makes visibility order equal seq order (see
@@ -588,14 +527,12 @@ class OfflineStore:
             _fsync_path(seg_dir)
         # publish-delay re-stamp: if this process stalled between the
         # committed_at capture and the rename (SIGSTOP, VM pause, NFS
-        # outage) for longer than a ledger-lag fraction, a consumed-segment
-        # ledger whose floor advanced past our stamp would presume this
-        # commit consumed without ever applying it (review r11). Re-stamp
-        # with a fresh instant via the same atomic replace: a sync that
-        # already saw the old stamp has consumed the segment (fine); one
-        # that never saw it now sees a timestamp above its floor. The
-        # remaining unguarded skew is CROSS-writer clock drift, documented
-        # at the ledger.
+        # outage) for longer than PUBLISH_RESTAMP_S, a timestamp-window
+        # consumer (changes_for_version) whose window closed during the
+        # stall would never see this commit. Re-stamp with a fresh instant
+        # via the same atomic replace: a consumer that already saw the old
+        # stamp has consumed the segment (fine); one that never saw it now
+        # finds it inside its next window.
         if time.time() - doc["committed_at"] > PUBLISH_RESTAMP_S:
             doc["committed_at"] = time.time()
             tmp2 = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
@@ -632,64 +569,33 @@ class OfflineStore:
         return n
 
     def _max_committed_seq(self) -> int:
-        """Max ``seq`` across every committed segment doc — the rare
-        counter-recovery scan (and 0 for a store that predates seqs)."""
-        md = self._manifest_dir()
-        mx = 0
-        for p in glob.glob(os.path.join(md, "v*", "*.json")) + glob.glob(
-            os.path.join(md, "v*.json")
-        ):
-            try:
-                with open(p) as f:
-                    mx = max(mx, int(json.load(f).get("seq", 0)))
-            except (OSError, ValueError, TypeError):
-                continue
-        return mx
+        """Max ``seq`` across every committed segment record — the rare
+        counter-recovery scan (0 for an empty store)."""
+        return max(
+            (
+                doc["seq"]
+                for vid in self._manifest_version_ids()
+                for doc in self._feed_segments(vid).values()
+            ),
+            default=0,
+        )
 
-    def _manifest_version_ids(self) -> set[int] | None:
-        """Version ids present in the manifest directory layout (root
-        ``v{id}.json`` files and ``v{id}/`` segment dirs holding at least
-        one segment JSON), deduplicated — whether each actually has
-        committed FILES still needs `_manifest_files`. Returns None when
-        no ``_manifests`` dir exists (pre-manifest store; callers use the
-        legacy plain-file fallback). The single parser of this layout —
-        `exists()` and `_committed_versions` both resolve through it."""
+    def _manifest_version_ids(self) -> set[int]:
+        """Version ids whose ``v{id}/`` segment dir holds at least one
+        segment JSON — whether each actually has committed FILES still
+        needs `_manifest_files`. The single parser of this layout."""
         md = self._manifest_dir()
-        vids: set[int] = set()
         try:
             names = os.listdir(md)
         except FileNotFoundError:
-            return None
-        for n in names:
-            if n.startswith("v") and n.endswith(".json"):
-                vids.add(int(n[1:-5]))
-            elif n.startswith("v") and os.path.isdir(os.path.join(md, n)):
-                if any(s.endswith(".json") for s in os.listdir(os.path.join(md, n))):
-                    vids.add(int(n[1:]))
-        return vids
-
-    def _committed_versions(self) -> list[int]:
-        ids = self._manifest_version_ids()
-        if ids is None:
-            # pre-manifest store: every version with plain-named files
-            return sorted(
-                vid
-                for vid in _partition_version_ids(self.path)
-                if self._legacy_plain_files(vid)
-            )
-        return sorted(v for v in ids if self._manifest_files(v))
-
-    def _migrate_legacy_store(self) -> None:
-        """One-time upgrade of a pre-manifest store: synthesize a
-        ``legacy`` segment per version listing its plain-named files, so
-        they stay visible once ``_manifests`` exists. Called from the
-        write paths — reads use the pure fallback and never write."""
-        if os.path.isdir(self._manifest_dir()):
-            return
-        for vid in _partition_version_ids(self.path):
-            plain = self._legacy_plain_files(vid)
-            if plain:
-                self._commit_segment(vid, plain, name="legacy")
+            return set()
+        return {
+            int(n[1:])
+            for n in names
+            if n.startswith("v")
+            and os.path.isdir(os.path.join(md, n))
+            and any(s.endswith(".json") for s in os.listdir(os.path.join(md, n)))
+        }
 
     def _read_files(self, rel_files: list[str]) -> DataFrame:
         if not rel_files:
@@ -731,8 +637,8 @@ class OfflineStore:
         second writer's complete append), and tests assert BOTH appends'
         rows are visible afterwards.
 
-        ``txn`` names the commit (12 lowercase hex chars — the data-file
-        prefix grammar ``_TXN_FILE_RE`` readers key on): an append whose
+        ``txn`` names the commit (12 lowercase hex chars — it also prefixes
+        the append's data-file names): an append whose
         segment already exists SHORT-CIRCUITS without reading or writing
         anything — the exactly-once primitive for epoch-keyed streaming
         sinks (a replayed foreachBatch trigger re-derives the same txn
@@ -750,7 +656,6 @@ class OfflineStore:
                 os.path.join(self._segment_dir(vid), f"{txn}.json")
             ):
                 return self.count_for_version(vid)
-        self._migrate_legacy_store()
         out = values.select(
             F.col("entity_id").cast("string").alias("entity_id"),
             F.col("value").cast("string").alias("value"),
@@ -830,7 +735,7 @@ class OfflineStore:
             finally:
                 shutil.rmtree(os.path.join(self.path, ".staging", txn), ignore_errors=True)
         # manifest-stat count: no read-back scan of the whole version per
-        # append (falls back to the scan only for stat-less legacy files)
+        # append (falls back to the scan only for stat-less files)
         return self.count_for_version(vid)
 
     # -- reads -------------------------------------------------------------
@@ -840,7 +745,9 @@ class OfflineStore:
         files, so in-flight/crashed appends are invisible. Version
         predicates still prune: the partition value is carried by each
         file's directory name."""
-        rel = [f for vid in self._committed_versions() for f in self._manifest_files(vid)]
+        rel = [
+            f for vid in sorted(self._manifest_version_ids()) for f in self._manifest_files(vid)
+        ]
         return self._read_files(rel)
 
     def values_for_version(
@@ -864,12 +771,12 @@ class OfflineStore:
     def count_for_version(self, version_id: int, as_of=None) -> int:
         """COUNT(*) for one version answered from manifest statistics
         alone — zero Spark jobs, zero files opened — whenever every live
-        file's row count was recorded at commit time (all post-round-10
-        segments; Delta/Iceberg answer the same query from their logs'
-        numRecords). Any stat-less file (legacy segments, pre-manifest
-        stores) falls back to the scan count, so the answer is always
-        exact. ``as_of`` gives the snapshot count under the same
-        time-travel rules as :meth:`values_for_version_as_of`.
+        file's row count was recorded at commit time (Delta/Iceberg answer
+        the same query from their logs' numRecords). A file whose footer
+        could not be read at commit time falls back to the scan count, so
+        the answer is always exact. ``as_of`` gives the snapshot count
+        under the same time-travel rules as
+        :meth:`values_for_version_as_of`.
 
         This is what the write path returns after every append: at 100 TB
         a scan-count after each micro-batch append would read the whole
@@ -919,8 +826,9 @@ class OfflineStore:
         included before the re-stamp and excluded after. Pin snapshot
         instants at least PUBLISH_RESTAMP_S in the past (or use the
         monotone per-segment ``seq`` in :meth:`history`) to be immune;
-        in exchange, the re-stamp is what guarantees the incremental-sync
-        ledger can never presume a stalled commit consumed."""
+        in exchange, the re-stamp is what guarantees a timestamp-window
+        consumer whose window closed during the stall still sees the
+        commit."""
         vid = int(version_id)
         secs = self._as_of_seconds(as_of)
         segs = self._read_segments(vid, as_of=secs)
@@ -934,33 +842,19 @@ class OfflineStore:
         audit/debug face of the manifest protocol (what Delta's DESCRIBE
         HISTORY is to its transaction log); feed a row's ``committed_at``
         to :meth:`values_for_version_as_of` to reproduce that moment.
-        ``seq`` is the store-wide monotone commit number (0 on segments
-        that predate it) — the clock-free ordering key."""
-        vid = int(version_id)
-        segs = self._read_segments(vid, as_of=None)
-        # also surface superseded records (filtered out of the live view)
-        all_segs: dict[str, dict] = {}
-        try:
-            names = os.listdir(self._segment_dir(vid))
-        except FileNotFoundError:
-            names = []
-        for n in names:
-            if n.endswith(".json"):
-                try:
-                    with open(os.path.join(self._segment_dir(vid), n)) as f:
-                        all_segs[n[:-5]] = json.load(f)
-                except FileNotFoundError:
-                    pass
-        all_segs.update(segs)
+        ``seq`` is the store-wide monotone commit number — the clock-free
+        ordering key."""
+        all_segs = self._feed_segments(version_id)
+        live = _live_segments(all_segs)
         return sorted(
             (
                 {
                     "segment": k,
-                    "seq": int(v.get("seq", 0)),
-                    "committed_at": float(v.get("committed_at", 0.0)),
-                    "n_files": len(v.get("files", [])),
-                    "supersedes": sorted(v.get("supersedes", [])),
-                    "live": k in segs,
+                    "seq": v["seq"],
+                    "committed_at": v["committed_at"],
+                    "n_files": len(v["files"]),
+                    "supersedes": v.get("supersedes", []),
+                    "live": k in live,
                 }
                 for k, v in all_segs.items()
             ),
@@ -995,10 +889,11 @@ class OfflineStore:
         * **restore** — not representable as row deltas (Delta's RESTORE
           has the same property); raises ``ValueError`` telling the
           consumer to resync from a snapshot read.
-        * **pre-CDC superseding segments** (a compaction or delete from
-          before this feed existed) — reconstructed as an exact multiset
-          diff of the superseded snapshot vs the new file set, IF those
-          files still exist; otherwise raises with resync guidance.
+        * **merge** (an incremental-state compaction, which rewrites the
+          rows themselves) — an exact multiset diff of the superseded
+          snapshot vs the new file set: the partial rows as deletes, the
+          merged rows as inserts. Needs the superseded files to still
+          exist; otherwise raises with resync guidance.
 
         Deletes that remove N copies of a row emit N delete rows
         (multiset semantics, matching ``exceptAll``)."""
@@ -1014,41 +909,35 @@ class OfflineStore:
 
     def _feed_segments(self, version_id: int) -> dict[str, dict]:
         """Every segment record ever committed for the version — live AND
-        superseded — plus the legacy root manifest as ``__root__``. The
-        change feed's universe: superseded records must stay visible so
-        pre-CDC compactions/deletes can be reconstructed as file diffs."""
-        vid = int(version_id)
-        all_segs: dict[str, dict] = {}
+        superseded — keyed by segment id: the one place segment JSON is
+        listed and parsed. Live views (:meth:`_read_segments`), the commit
+        log and the change feed all derive from it; the feed needs the
+        superseded records to diff a merge against what it replaced."""
+        seg_dir = self._segment_dir(version_id)
         try:
-            names = os.listdir(self._segment_dir(vid))
+            names = os.listdir(seg_dir)
         except FileNotFoundError:
-            names = []
+            return {}
+        all_segs: dict[str, dict] = {}
         for n in names:
-            if n.endswith(".json"):
-                try:
-                    with open(os.path.join(self._segment_dir(vid), n)) as f:
-                        all_segs[n[:-5]] = json.load(f)
-                except FileNotFoundError:
-                    pass  # vacuumed between listdir and open — legitimately gone
-                except ValueError as e:
-                    # segments are staged + atomically renamed, so a parse
-                    # failure is real on-disk corruption, not a torn read.
-                    # Skipping would silently erase the commit from the
-                    # change-feed universe (its rows never reach any
-                    # consumer, with zero diagnostics) — fail loudly
-                    # instead (review r11)
-                    raise ValueError(
-                        f"corrupt segment record for version {vid}: "
-                        f"{os.path.join(self._segment_dir(vid), n)} — the "
-                        "change feed cannot be reconstructed past it; "
-                        "restore the file from a replica or RESTORE the "
-                        "version to a snapshot that predates it"
-                    ) from e
-        try:
-            with open(os.path.join(self._manifest_dir(), f"v{vid}.json")) as f:
-                all_segs.setdefault("__root__", json.load(f))
-        except (FileNotFoundError, ValueError):
-            pass
+            if not n.endswith(".json"):
+                continue  # tmp files pre-rename are "*.json.tmp-*"
+            try:
+                with open(os.path.join(seg_dir, n)) as f:
+                    all_segs[n[:-5]] = json.load(f)
+            except FileNotFoundError:
+                pass  # the version was dropped between listdir and open
+            except ValueError as e:
+                # segments are staged + atomically renamed, so a parse
+                # failure is real on-disk corruption, not a torn read.
+                # Skipping would silently erase the commit from every view
+                # (its rows never reach any reader or feed consumer, with
+                # zero diagnostics) — fail loudly instead
+                raise ValueError(
+                    f"corrupt segment record for version {version_id}: "
+                    f"{os.path.join(seg_dir, n)} — the version cannot be "
+                    "resolved past it; restore the file from a replica"
+                ) from e
         return all_segs
 
     def changes_for_segments(self, version_id: int, segment_ids) -> DataFrame:
@@ -1114,14 +1003,12 @@ class OfflineStore:
 
         parts: list[DataFrame] = []
         for seg, doc in sorted(
-            all_segs.items(), key=lambda kv: (float(kv[1].get("committed_at", 0.0)), kv[0])
+            all_segs.items(), key=lambda kv: (kv[1]["committed_at"], kv[0])
         ):
-            ts = float(doc.get("committed_at", 0.0))
+            ts = doc["committed_at"]
             if not keep(seg, ts):
                 continue
-            op = (doc.get("cdc") or {}).get("op")
-            if op is None:
-                op = "append" if not doc.get("supersedes") else "legacy_diff"
+            op = doc["cdc"]["op"]
             if op == "compact":
                 continue
             if op == "restore":
@@ -1149,12 +1036,11 @@ class OfflineStore:
                     *[os.path.join(self.path, rf) for rf in cfiles]
                 )
                 parts.append(tagged(rows, "delete", ts, seg))
-            else:  # legacy_diff: pre-CDC compaction/delete — exact file diff
+            elif op == "merge":  # rows rewritten in place: exact file diff
                 old_rel = sorted(
                     {
                         f
                         for s_name in doc.get("supersedes", [])
-                        if s_name in all_segs
                         for f in all_segs[s_name]["files"]
                     }
                 )
@@ -1162,6 +1048,11 @@ class OfflineStore:
                 old = read_rel(old_rel)
                 parts.append(tagged(new.exceptAll(old), "insert", ts, seg))
                 parts.append(tagged(old.exceptAll(new), "delete", ts, seg))
+            else:
+                raise ValueError(
+                    f"segment {seg} of version {vid} records commit op {op!r}, "
+                    "which this reader does not support"
+                )
         if not parts:
             return self.spark.createDataFrame([], meta)
         out = parts[0]
@@ -1187,7 +1078,6 @@ class OfflineStore:
         restore to the CURRENT state is a no-op (``segment=None``)."""
         vid = int(version_id)
         secs = self._as_of_seconds(as_of)
-        self._migrate_legacy_store()
         os.makedirs(self._segment_dir(vid), exist_ok=True)
         lock = os.path.join(self._segment_dir(vid), ".compact.lock")
         with _pid_lock(lock, f"restore for version {vid}"):
@@ -1282,16 +1172,11 @@ class OfflineStore:
         anything was deleted."""
         vid = int(version_id)
         deleted = False
-        root_manifest = os.path.join(self._manifest_dir(), f"v{vid}.json")
-        if os.path.exists(root_manifest):
-            os.remove(root_manifest)
-            deleted = True
         seg_dir = self._segment_dir(vid)
         if os.path.isdir(seg_dir):
             shutil.rmtree(seg_dir)
-            deleted = True
-        if deleted:
             _fsync_path(self._manifest_dir())
+            deleted = True
         part_dir = os.path.join(self.path, f"feature_version_id={vid}")
         if os.path.isdir(part_dir):
             shutil.rmtree(part_dir)
@@ -1347,7 +1232,6 @@ class OfflineStore:
                 "delete must be the explicit drop_version_values()"
             )
         vid = int(version_id)
-        self._migrate_legacy_store()
         os.makedirs(self._segment_dir(vid), exist_ok=True)
         lock = os.path.join(self._segment_dir(vid), ".compact.lock")
         report = {
@@ -1493,11 +1377,17 @@ def vacuum_orphans(store: OfflineStore, min_age_seconds: float = 24 * 3600) -> l
     resolve manifested files. Returns the removed paths."""
     import time
 
-    committed = {
-        rf
-        for vid in store._committed_versions()
-        for rf in store._manifest_files(vid)
-    }
+    # committed data files (live segments) and referenced change-data
+    # sidecars (every segment: superseded ones still feed historical
+    # windows, and share the data files' retention story) in one pass
+    committed: set[str] = set()
+    referenced_cdc: set[str] = set()
+    for vid in store._manifest_version_ids():
+        segs = store._feed_segments(vid)
+        committed.update(f for s in _live_segments(segs).values() for f in s["files"])
+        referenced_cdc.update(
+            f for s in segs.values() for f in s["cdc"].get("change_files", [])
+        )
     removed: list[str] = []
     cutoff = time.time() - min_age_seconds
     for part in glob.glob(os.path.join(store.path, "feature_version_id=*")):
@@ -1519,25 +1409,7 @@ def vacuum_orphans(store: OfflineStore, min_age_seconds: float = 24 * 3600) -> l
             pass
     # change-data sidecars no committed segment references (a delete that
     # crashed between the sidecar rename and its segment commit); same age
-    # gate. Referenced sidecars stay — they are the change feed's payload
-    # and share the data files' retention story.
-    referenced_cdc: set[str] = set()
-    for vid in store._committed_versions():
-        for doc in store._read_segments(vid).values():
-            referenced_cdc.update((doc.get("cdc") or {}).get("change_files", []))
-        # superseded segments' sidecars still feed historical windows
-        seg_dir = store._segment_dir(vid)
-        if os.path.isdir(seg_dir):
-            for n in os.listdir(seg_dir):
-                if n.endswith(".json"):
-                    try:
-                        with open(os.path.join(seg_dir, n)) as f:
-                            doc = json.load(f)
-                    except (FileNotFoundError, ValueError):
-                        continue
-                    referenced_cdc.update(
-                        (doc.get("cdc") or {}).get("change_files", [])
-                    )
+    # gate
     for cdir in glob.glob(os.path.join(store.path, "_change_data", "v*", "*")):
         rel = os.path.relpath(cdir, store.path)
         try:
@@ -1587,7 +1459,6 @@ def compact_version_partition(
     store.spark = spark
     store.root = os.path.dirname(root)
     store.path = root
-    store._migrate_legacy_store()
     os.makedirs(store._segment_dir(vid), exist_ok=True)
     lock = os.path.join(store._segment_dir(vid), ".compact.lock")
     _lock = ExitStack()

@@ -1,14 +1,21 @@
 """Store-level change-data-feed edges the seam suite doesn't reach:
-purge semantics, pre-CDC legacy diffs, sidecar vacuum lifecycle."""
+purge semantics, merge diffs, sidecar vacuum lifecycle."""
 
+import glob
+import json
 import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from feature_store_implementation_spark.store.materialize import (
+    compact_incremental_feature,
+    update_incremental_feature,
+)
 from feature_store_implementation_spark.store.offline import (
     OfflineStore,
+    compact_version_partition,
     vacuum_orphans,
 )
 
@@ -55,33 +62,32 @@ def test_unpurged_delete_feeds_full_rows(spark, store):
     assert [(r["entity_id"], r["value"]) for r in dels] == [("e2", "a:2")]
 
 
-def test_legacy_superseding_segment_diffs_exactly(spark, store):
-    """A pre-CDC superseding segment (no cdc record) reconstructs its
-    changes as an exact multiset diff when the old files still exist."""
-    store.write_values(1, _rows(spark, "a", 5))
-    # simulate a pre-r10 delete: rewrite files and supersede WITHOUT a cdc
-    # record, keeping the old files (retention mode)
-    snap = store._read_segments(1)
-    old_rel = sorted({f for s in snap.values() for f in s["files"]})
-    kept = store._read_files(old_rel).filter(F.col("entity_id") != "e1")
-    import glob as _glob
-    import os as _os
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "k string, v double")
 
-    staging = os.path.join(store.path, ".staging", "legacy")
-    kept.select("entity_id", "value", "computed_at").coalesce(1).write.parquet(staging)
-    part_dir = os.path.join(store.path, "feature_version_id=1")
-    new_rel = []
-    for i, src in enumerate(sorted(_glob.glob(os.path.join(staging, "part-*.parquet")))):
-        name = f"abcdefabcdef-part-legacy{i}.parquet"
-        _os.rename(src, os.path.join(part_dir, name))
-        new_rel.append(f"feature_version_id=1/{name}")
-    store._commit_segment(1, new_rel, supersedes=list(snap), name="legacyseg")
 
-    feed = store.changes_for_version(1).collect()
-    dels = [r for r in feed if r["_change_type"] == "delete" and r["_commit_segment"] == "legacyseg"]
-    ins = [r for r in feed if r["_change_type"] == "insert" and r["_commit_segment"] == "legacyseg"]
-    assert [(r["entity_id"], r["value"]) for r in dels] == [("e1", "a:1")]
-    assert ins == []  # rewrite added nothing
+def test_merge_commit_feeds_partials_as_deletes_merged_as_inserts(spark, store):
+    """compact_incremental_feature rewrites the rows themselves (partial
+    states -> one merged state per entity), so its "merge" commit feeds
+    an exact multiset diff: every partial row as a delete, every merged
+    row as an insert."""
+    update_incremental_feature(store, 1, _batch(spark, [("a", 1.0), ("b", 2.0)]), "k", "v")
+    update_incremental_feature(store, 1, _batch(spark, [("a", 3.0)]), "k", "v")
+
+    def rows(rs):
+        return sorted((r["entity_id"], r["value"], r["computed_at"]) for r in rs)
+
+    partials = rows(store.values_for_version(1).collect())
+    time.sleep(0.02)
+    mid = time.time()
+    time.sleep(0.02)
+    compact_incremental_feature(store, 1)
+    merged = rows(store.values_for_version(1).collect())
+    assert len(partials) == 3 and len(merged) == 2
+
+    feed = store.changes_for_version(1, since=mid).collect()
+    assert rows(r for r in feed if r["_change_type"] == "delete") == partials
+    assert rows(r for r in feed if r["_change_type"] == "insert") == merged
 
 
 def test_orphan_change_sidecar_is_vacuumed_referenced_stays(spark, store):
@@ -162,6 +168,26 @@ def test_commit_seq_monotone_and_counter_recovers(spark, store):
     store.write_values(2, _rows(spark, "d", 3))
     assert max(r["seq"] for r in store.history(2)) == 4
 
-    # a delete and a compaction are commits too — they take seqs in order
+    # a delete, a restore, a file compaction and an incremental-state
+    # merge are commits too — they take seqs in order
+    before_delete = time.time()
     store.delete_rows(1, entity_ids=["e0"])
     assert max(r["seq"] for r in store.history(1)) == 5
+    store.restore_version(1, as_of=before_delete)
+    assert max(r["seq"] for r in store.history(1)) == 6
+    compact_version_partition(spark, store.path, 2)
+    assert max(r["seq"] for r in store.history(2)) == 7
+    update_incremental_feature(store, 3, _batch(spark, [("a", 1.0)]), "k", "v")
+    update_incremental_feature(store, 3, _batch(spark, [("a", 2.0)]), "k", "v")
+    compact_incremental_feature(store, 3)
+    assert [r["seq"] for r in store.history(3)] == [8, 9, 10]
+
+    # the invariant the readers rest on: every segment record names its
+    # seq, its commit instant and its op
+    ops = set()
+    for p in glob.glob(os.path.join(store._manifest_dir(), "v*", "*.json")):
+        with open(p) as f:
+            doc = json.load(f)
+        assert doc["seq"] >= 1 and isinstance(doc["committed_at"], float), p
+        ops.add(doc["cdc"]["op"])
+    assert ops == {"append", "delete", "restore", "compact", "merge"}

@@ -499,6 +499,15 @@ def test_manifest_commit_crash_leaves_no_visible_rows(spark, tmp_path):
         "a", "b", "c",
     }
 
+    # a crashed FIRST write on an empty store leaves data files and no
+    # segment: that store is empty, not partially written
+    store2 = OfflineStore(spark, str(tmp_path / "values2"))
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store2.write_values(1, more, _crash_before_commit=True)
+    assert os.listdir(os.path.join(store2.path, "feature_version_id=1"))
+    assert not store2.exists()
+    assert store2.values().count() == 0
+
 
 def test_manifest_drop_version_is_reader_atomic(spark, tmp_path):
     from feature_store_implementation_spark.store.offline import OfflineStore
@@ -651,87 +660,6 @@ def test_compact_keep_old_files_defers_to_vacuum(spark, tmp_path):
     removed = vacuum_orphans(store, min_age_seconds=3600)
     assert sorted(os.path.basename(p) for p in removed) == sorted(before)
     assert store.values_for_version(6).count() == 3
-
-
-def test_round6_single_manifest_readable_and_superseded_by_compaction(spark, tmp_path):
-    """Format migration: a round-6 store (ONE _manifests/v{id}.json listing
-    all files) reads as-is — it's the __root__ pseudo-segment — appends
-    coexist with it, and compaction retires it."""
-    import json
-    import os
-    import shutil
-
-    from feature_store_implementation_spark.store.offline import (
-        OfflineStore,
-        compact_version_partition,
-    )
-
-    store = OfflineStore(spark, str(tmp_path / "values"))
-    vals = spark.createDataFrame([("a", "1"), ("b", "2")], "entity_id string, value string")
-    store.write_values(3, vals)
-    # rewrite the store into the round-6 single-file layout
-    files = store._manifest_files(3)
-    shutil.rmtree(store._segment_dir(3))
-    root_manifest = os.path.join(store._manifest_dir(), "v3.json")
-    with open(root_manifest, "w") as f:
-        json.dump({"files": files}, f)
-
-    assert store._manifest_files(3) == files
-    assert store.values_for_version(3).count() == 2
-    # an append coexists with the old-format manifest
-    more = spark.createDataFrame([("c", "3")], "entity_id string, value string")
-    assert store.write_values(3, more) == 3
-    # compaction supersedes it; the retired record is KEPT as commit log
-    # (r7: history()/as-of snapshots resolve through it) but is inert for
-    # live reads
-    compact_version_partition(spark, store.path, 3)
-    assert os.path.exists(root_manifest)
-    assert "__root__" not in store._read_segments(3)
-    assert store.values_for_version(3).count() == 3
-
-
-def test_premanifest_store_reads_and_migrates_on_write(spark, tmp_path):
-    """Format migration: a pre-manifest store (plain Spark part-* files,
-    no _manifests at all) must NOT read as empty — its files were the old
-    format's commit — and the first write migrates them into explicit
-    legacy segments. A crashed NEW-format first write (txn-prefixed
-    names) is still invisible."""
-    import os
-
-    from feature_store_implementation_spark.store.offline import OfflineStore
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "values")
-    legacy_part = os.path.join(root, "feature_values", "feature_version_id=8")
-    df = spark.createDataFrame(
-        [("a", "1"), ("b", "2")], "entity_id string, value string"
-    ).select("entity_id", "value", F.current_timestamp().alias("computed_at"))
-    df.coalesce(1).write.parquet(legacy_part + ".tmp")
-    os.makedirs(legacy_part)
-    for f in os.listdir(legacy_part + ".tmp"):
-        if f.startswith("part-") and f.endswith(".parquet"):
-            os.rename(os.path.join(legacy_part + ".tmp", f), os.path.join(legacy_part, f))
-    import shutil
-
-    shutil.rmtree(legacy_part + ".tmp")
-
-    store = OfflineStore(spark, root)
-    assert store.exists()
-    assert store.values_for_version(8).count() == 2
-    assert store._committed_versions() == [8]
-
-    more = spark.createDataFrame([("c", "3")], "entity_id string, value string")
-    assert store.write_values(8, more) == 3  # migration kept the legacy rows
-    assert os.path.isdir(store._segment_dir(8))
-    assert store.values_for_version(8).count() == 3
-
-    # contrast: a crashed new-format FIRST write leaves txn-prefixed files
-    # and no manifests — that store is empty, not legacy
-    store2 = OfflineStore(spark, str(tmp_path / "values2"))
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        store2.write_values(1, more, _crash_before_commit=True)
-    assert not store2.exists()
-    assert store2.values().count() == 0
 
 
 def test_values_for_versions_reads_only_named_manifests(spark, tmp_path):
@@ -1219,6 +1147,18 @@ def test_cold_key_stampede_single_flight(fs):
     assert computes == ["nope", "nope"]  # retried, not stuck
 
 
+def test_serve_vector_counts_each_cache_probe_once(fs):
+    """A cold serve is one miss and a warm serve one hit: the re-probe
+    under the single-flight slot must not count the request twice."""
+    _, f = _setup_feature(fs)
+    fs.compute_version(f.id, "v1.0", DATA, entity_id_column="id")
+    fs.cache.clear()
+    fs.cache.hits = fs.cache.misses = 0
+    fs.serve_vector("u1")
+    fs.serve_vector("u1")
+    assert (fs.cache.hits, fs.cache.misses) == (1, 1)
+
+
 def test_manifest_entity_range_file_skipping(spark, tmp_path):
     """Round-8 data skipping: segments record per-file entity [min,max],
     and point/IN-list reads drop files whose range excludes every
@@ -1391,78 +1331,6 @@ def test_lookup_online_snapshot_parity_with_serve_vector(fs, tmp_path):
     # feature_names projection
     vec = lookup_online_snapshot(out, "e010", feature_names=["amt2"])
     assert set(vec.features) == {"amt2"}
-
-
-def test_lookup_online_snapshot_metaless_export_with_empty_shards(fs, tmp_path):
-    """A pre-r9 export has no _snapshot_meta.json, and partitionBy writes
-    NO directory for empty shards — so the shard modulus is not
-    recoverable from the layout (counting dirs, or max+1, is wrong
-    whenever any shard came out empty). The lookup must fall back to
-    scanning every shard file: slower, never wrong."""
-    import glob
-    import os
-
-    import pytest
-
-    from feature_store_implementation_spark.serving.online_snapshot import (
-        lookup_online_snapshot,
-    )
-
-    t = fs.register_raw_table("t_ml", {"required_columns": ["id", "amount"]})
-    f = fs.create_feature("amt3", t.id, "SUM(amount)", "numeric")
-    fs.compute_version(
-        f.id, "v1.0", [{"id": f"m{i}", "amount": float(i)} for i in range(3)]
-    )
-    out = str(tmp_path / "snap_old")
-    fs.export_online_snapshot(out, n_shards=16)  # 3 entities → empty shards
-    assert len(glob.glob(os.path.join(out, "shard=*"))) < 16
-    os.remove(os.path.join(out, "_snapshot_meta.json"))  # pre-r9 artifact
-
-    for i in range(3):
-        vec = lookup_online_snapshot(out, f"m{i}")
-        assert vec.features == {"amt3": float(i)}
-    with pytest.raises(KeyError):
-        lookup_online_snapshot(out, "m99")
-
-
-def test_compact_incremental_feature_migrates_premanifest_store(spark, tmp_path):
-    """compact_incremental_feature on a PRE-MANIFEST store must migrate the
-    legacy plain-named files into segments BEFORE snapshotting (like
-    compact_version_partition does): without the migrate the snapshot is
-    empty, the merged segment is built from nothing, and committing it
-    hides every legacy file — upgrading would silently drop all data."""
-    import json
-    import os
-    import shutil
-
-    from feature_store_implementation_spark.store.materialize import (
-        compact_incremental_feature,
-        read_incremental_feature,
-    )
-    from feature_store_implementation_spark.store.offline import OfflineStore
-    from pyspark.sql import functions as F
-
-    root = str(tmp_path / "values")
-    legacy_part = os.path.join(root, "feature_values", "feature_version_id=9")
-    partial = json.dumps(
-        {"cnt": 2, "sum_v": "3.0", "sum_sq": "5.0", "min_v": 1.0, "max_v": 2.0}
-    )
-    df = spark.createDataFrame(
-        [("a", partial), ("b", partial)], "entity_id string, value string"
-    ).select("entity_id", "value", F.current_timestamp().alias("computed_at"))
-    df.coalesce(1).write.parquet(legacy_part + ".tmp")
-    os.makedirs(legacy_part)
-    for f in os.listdir(legacy_part + ".tmp"):
-        if f.startswith("part-") and f.endswith(".parquet"):
-            os.rename(
-                os.path.join(legacy_part + ".tmp", f), os.path.join(legacy_part, f)
-            )
-    shutil.rmtree(legacy_part + ".tmp")
-
-    store = OfflineStore(spark, root)
-    assert compact_incremental_feature(store, 9) == 2
-    got = {r["entity_id"]: r["cnt"] for r in read_incremental_feature(store, 9).collect()}
-    assert got == {"a": 2, "b": 2}
 
 
 def test_compact_lock_dead_holder_autoclears_live_holder_excludes(fs, spark, tmp_path):
