@@ -21,8 +21,9 @@ Registry rows are metadata — a few thousand rows at most, mutated one row per
 API call. The reference keeps them in SQLite; the honest cluster-scale analog
 is a transactional metastore (Delta/Iceberg catalog tables — tiny, driver
 query cost ~0). Here they live in a JSON-lines file per table with atomic
-rename writes, loaded into Spark on demand via :meth:`Catalog.df` for
-one-plan serving joins. The offline store (feature VALUES — the part that
+rename writes, and every read — version resolution for serving included
+(:meth:`Catalog.resolve_versions`) — is plain Python over the in-memory
+rows, with no Spark job. The offline store (feature VALUES — the part that
 scales to 100 TB) is Spark-written partitioned parquet in ``store/offline.py``.
 """
 
@@ -48,9 +49,12 @@ from ..errors import ConflictError, NotFoundError
 # orphan-version bug, main.py:216 vs 224, crash-window included).
 VALID_STATUSES = ("pending", "active", "deprecated", "archived")
 
+# fixed-width UTC: lexical order of two stamps is their chronological order
+_TS_FORMAT = "%Y-%m-%d %H:%M:%S.%f"
+
 
 def _now() -> str:
-    return datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")
+    return datetime.now(timezone.utc).strftime(_TS_FORMAT)
 
 
 @dataclass
@@ -169,8 +173,8 @@ class Catalog:
         object store, front the catalog with a single writer (registry
         metadata is admin-plane and KB-scale — Delta/JDBC is the
         transactional production drop-in, as with the value store).
-        Readers on OTHER instances refresh via :meth:`refresh` (driver
-        reads) or :meth:`df` (Spark reads the files directly)."""
+        Readers on OTHER instances pick those rows up through
+        :meth:`_refresh`, which every row read calls first."""
         fd = os.open(os.path.join(self.root, ".lock"), os.O_CREAT | os.O_RDWR, 0o644)
         try:
             fcntl.flock(fd, fcntl.LOCK_EX)
@@ -195,14 +199,14 @@ class Catalog:
             self._read_stamps.pop(table, None)
 
     def _refresh(self, table: str) -> None:
-        """mtime-gated cross-process READ freshness — the gate r9 gave
-        :meth:`df` (Spark serve joins), extended to the dataclass-row
-        read paths: a read-only SERVING process shares the catalog root
-        with a compute process, and serving init-time ``self._rows``
-        would 404 / omit metadata the other process committed after this
-        instance started (GET /features/{id}, list routes, the
-        compute-route FK pre-check). One os.stat per read; reload only
-        when the jsonl actually changed."""
+        """mtime-gated cross-process READ freshness for every row read: a
+        read-only SERVING process shares the catalog root with a compute
+        process, and serving init-time ``self._rows`` would 404 / omit
+        metadata the other process committed after this instance started
+        (GET /features/{id}, list routes, the compute-route FK pre-check)
+        and would never serve a version activated after startup (stale
+        under the request cache, so no TTL would ever heal it). One
+        os.stat per read; reload only when the jsonl actually changed."""
         try:
             st = os.stat(self._path(table))
         except OSError:
@@ -287,6 +291,7 @@ class Catalog:
     # -- versions (reference main.py:140-244) ------------------------------
 
     def check_version_free(self, feature_id: int, version: str) -> None:
+        self._refresh("feature_versions")
         if any(
             v.feature_id == feature_id and v.version == version
             for v in self._rows["feature_versions"]
@@ -358,39 +363,75 @@ class Catalog:
             ]
             self._flush("feature_versions")
 
-    # -- Spark views for one-plan serving ----------------------------------
+    # -- version resolution for serving (reference main.py:294-300) -------
 
-    def df(self, spark: SparkSession, table: str) -> DataFrame:
-        """Registry table as a (tiny, broadcastable) Spark DataFrame with an
-        explicit schema: ids are long, timestamps stay strings (they are
-        catalog metadata, compared lexically — ISO format sorts correctly),
-        nested JSON is kept as a JSON string column.
+    def resolve_versions(
+        self,
+        version: str | None = None,
+        as_of_s: float | None = None,
+        feature_names: list[str] | None = None,
+    ) -> list[tuple[int, str, int, str]]:
+        """The versions a read serves, as ``(feature_id, feature_name,
+        feature_version_id, version)`` rows: the explicit ``version`` pin,
+        or the latest active version of each feature (B4).
 
-        Reloads the table from disk first when its jsonl file changed
-        since this instance last read it: a read-only SERVING process
-        shares the catalog root with a compute process, and building the
-        frame from init-time ``self._rows`` would serve versions activated
-        after startup never (stale under the request cache, so no TTL
-        would ever heal it). Writers stay consistent regardless — every
-        mutation reloads under the flock."""
-        from pyspark.sql import types as T
+        * A pin may read deprecated/archived versions (a historical read)
+          but NEVER 'pending': a pending row is an in-flight write
+          (two-phase commit) — serving it would return, and cache for the
+          TTL, data for a version that recovery may delete moments later.
+        * Latest is the active row with the highest ``computed_at``, the
+          higher id breaking ties; a NULL ``computed_at`` sorts last.
+        * ``as_of_s`` (unix seconds) pins the RESOLUTION, not just the
+          values read: a version not yet SERVABLE at the instant
+          (activated_at > as_of — activation time, not creation time, so a
+          version in-flight during an export, created pending before but
+          activated after, is excluded too) is invisible, so a
+          later-activated v2 cannot hijack latest-per-feature and turn a
+          reproduced export's column all-NULL. Rows without activated_at
+          (a version that went pending → deprecated) coalesce to
+          computed_at; rows with NEITHER timestamp stay visible
+          (always-visible beats silently dropping a feature from a
+          replayed export). Deprecation after the instant is not
+          reconstructed — status transitions other than activation are
+          not timestamped in the catalog.
+        * Versions of a feature with no ``features`` row are dropped, and
+          ``feature_names`` filters the resolved rows (B3)."""
+        self._refresh("features")
+        self._refresh("feature_versions")
+        names = {f.id: f.name for f in self._rows["features"]}
+        rows = [v for v in self._rows["feature_versions"] if v.feature_id in names]
+        if as_of_s is not None:
+            boundary = datetime.fromtimestamp(as_of_s, timezone.utc).strftime(_TS_FORMAT)
 
-        self._refresh(table)
+            def servable(v: VersionRow) -> bool:
+                at = v.computed_at if v.activated_at is None else v.activated_at
+                return at is None or at <= boundary
 
-        cls = _TABLES[table]
-        cols = list(cls.__dataclass_fields__)
-        long_cols = {"id", "feature_id", "raw_table_id"}
-        schema = T.StructType(
-            [
-                T.StructField(c, T.LongType() if c in long_cols else T.StringType(), True)
-                for c in cols
-            ]
+            rows = [v for v in rows if servable(v)]
+        if version is not None:
+            picked = [v for v in rows if v.version == version and v.status != "pending"]
+        else:
+            # oldest first — a NULL computed_at counts as oldest and the
+            # higher id wins a tie — so the last row kept per feature is
+            # its latest
+            latest = {}
+            for v in sorted(
+                (v for v in rows if v.status == "active"),
+                key=lambda v: (v.computed_at is not None, v.computed_at or "", v.id),
+            ):
+                latest[v.feature_id] = v
+            picked = list(latest.values())
+        return sorted(
+            (v.feature_id, names[v.feature_id], v.id, v.version)
+            for v in picked
+            if not feature_names or names[v.feature_id] in feature_names
         )
-        rows = []
-        for r in self._rows[table]:
-            d = asdict(r)
-            for k in ("schema_definition", "version_metadata"):
-                if k in d:
-                    d[k] = json.dumps(d[k]) if d[k] is not None else None
-            rows.append(tuple(d[c] for c in cols))
-        return spark.createDataFrame(rows, schema=schema)
+
+    def df(self, spark: SparkSession, resolved: list[tuple[int, str, int, str]]) -> DataFrame:
+        """:meth:`resolve_versions` rows as the tiny broadcast side of a
+        serving join: ``(feature_version_id, feature_name)``."""
+        return spark.createDataFrame(
+            [(vid, name) for _fid, name, vid, _version in resolved],
+            "feature_version_id long, feature_name string",
+        )
+

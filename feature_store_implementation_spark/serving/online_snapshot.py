@@ -8,11 +8,12 @@ pmod(xxhash64(entity_id), n_shards)``), entity-SORTED parquet files, one
 file per shard. :func:`lookup_online_snapshot` is that router: hash the
 entity id driver-side (a pure-Python XXH64 bit-identical to Spark's
 ``xxhash64`` expression — pinned against Spark in
-tests/test_feature_store.py), open the ONE shard file the key routes to,
-and let pyarrow's row-group statistics prune to the one page run holding
-the sorted key. **No Spark job, no JVM round-trip** — the lookup is a
-single local parquet read, the same data path a RocksDB/HBase tier would
-serve after bulk-ingesting these exact files. At 100 TB the snapshot
+tests/test_feature_store.py) and answer from the ONE shard the key routes
+to. **No Spark job, no JVM round-trip**: each shard file is read once and
+its rows kept by entity id, and the meta once per export, so a warm
+lookup costs one listdir of the routed shard and a dict probe — the
+data path a RocksDB/HBase tier would serve after bulk-ingesting these
+exact files. At 100 TB the snapshot
 lives behind a real KV store; this module is the single-file-per-shard
 degenerate of that tier and the latency floor SCALING.md's serving table
 records.
@@ -167,43 +168,66 @@ def _snapshot_meta(path: str) -> dict:
         raise FileNotFoundError(f"no online snapshot at {path}") from None
 
 
+# What lookups last read: the meta per snapshot path, and per shard
+# directory its live files and rows. An entry is replaced, never kept
+# beside a newer one, so the memory is one generation of each snapshot.
+_METAS: dict[str, dict] = {}
+_SHARDS: dict[str, tuple[list[str], dict[str, dict]]] = {}
+
+
+def _routed_rows(path: str, probe: str, fresh: bool) -> tuple[dict, dict[str, dict]]:
+    """(meta, entity_id → row of the shard ``probe`` routes to). A data
+    file is never rewritten under its name (an export writes unique part
+    names, a sync renames in a new ``gen{G}-`` file), and the meta fields
+    a lookup reads (``n_shards``, ``version``) change only by an export,
+    which names every file anew. So unless ``fresh``, an unchanged listing
+    of the routed shard proves both entries current: one listdir. This
+    assumes a shard fits in memory as Python rows, true of the
+    single-file-per-shard tier; a bigger shard wants a reader that
+    bisects the sorted file's footer instead."""
+    import pyarrow.dataset as ds
+
+    meta = None if fresh else _METAS.get(path)
+    if meta is None:
+        meta = _METAS[path] = _snapshot_meta(path)
+    shard_dir = os.path.join(path, f"shard={snapshot_shard(probe, meta['n_shards'])}")
+    live = shard_live_files(shard_dir)
+    hit = _SHARDS.get(shard_dir)
+    if hit is not None and hit[0] == live:
+        return meta, hit[1]
+    if not fresh:  # a new generation, maybe of a re-export: read the meta
+        return _routed_rows(path, probe, fresh=True)
+    rows = ds.dataset(live, format="parquet").to_table().to_pylist() if live else []
+    by_id = {r["entity_id"]: r for r in reversed(rows)}  # first row wins
+    _SHARDS[shard_dir] = (live, by_id)
+    return meta, by_id
+
+
 def lookup_online_snapshot(
     path: str,
     entity_id: str,
     feature_names: list[str] | None = None,
 ) -> FeatureVector:
     """Shard-routed point read from an :meth:`~.vectors.FeatureStore.
-    export_online_snapshot` artifact: ONE local parquet file opened, row
-    groups pruned by the sorted entity_id statistics, no Spark job.
+    export_online_snapshot` artifact: ONE shard consulted, its file read
+    on first use only, no Spark job.
     Raises ``KeyError`` for an entity the snapshot doesn't hold (the
     snapshot is a frozen export — an unknown key is a router miss, not a
     batch-tier fallback; callers wanting freshness go through
     ``serve_vector``)."""
-    import pyarrow.dataset as ds
-
     from ..store.codec import decode_value_py
 
-    meta = _snapshot_meta(path)
     # the exported entity_id column is string (the router hashes UTF-8
     # bytes, matching Spark's xxhash64 over a string column) — coerce the
     # probe the same way snapshot_shard does, so a numeric id from a JSON
     # body probes instead of raising an Arrow type error
     probe = str(entity_id)
-    live = shard_live_files(
-        os.path.join(path, f"shard={snapshot_shard(probe, meta['n_shards'])}")
-    )
-    if not live:  # partitionBy writes no directory for an empty shard
+    meta, rows = _routed_rows(path, probe, fresh=False)
+    if probe not in rows:  # a miss is answered from a fresh meta
+        meta, rows = _routed_rows(path, probe, fresh=True)
+    if probe not in rows:
         raise KeyError(f"entity '{entity_id}' not in snapshot")
-    table = ds.dataset(live, format="parquet").to_table(
-        filter=ds.field("entity_id") == probe
-    )
-    if table.num_rows == 0:
-        raise KeyError(f"entity '{entity_id}' not in snapshot")
-    row = table.to_pylist()[0]
-    row.pop("shard", None)
-    eid = row.pop("entity_id")
-    if feature_names is not None:
-        row = {k: v for k, v in row.items() if k in set(feature_names)}
+    row = rows[probe]
     # B8 parity with serve_vector: a feature the entity LACKS (NULL pivot
     # cell in the export) is omitted, not returned as None, and a request
     # that matches nothing the entity holds is a miss (404 at the route)
@@ -211,14 +235,15 @@ def lookup_online_snapshot(
     # VALUE is null is distinct: the export preserves it as the codec
     # string "null" (serve_matrix preserve_stored_nulls), which decodes
     # to None below and stays in the vector, exactly like serve_vector.
-    row = {k: v for k, v in row.items() if v is not None}
+    keep = set(row if feature_names is None else feature_names) - {"shard", "entity_id"}
+    row = {k: v for k, v in row.items() if k in keep and v is not None}
     if not row:
         raise KeyError(f"entity '{entity_id}' holds no features for this request")
     # the snapshot holds the store's string-encoded values; decode with
     # the same codec serve_vector applies (B6 parity)
     row = {k: decode_value_py(v) for k, v in row.items()}
     return FeatureVector(
-        entity_id=eid,
+        entity_id=probe,
         features=row,
         version=meta["version"],
         retrieved_at=datetime.now(timezone.utc).isoformat(),

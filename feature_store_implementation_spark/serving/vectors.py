@@ -6,17 +6,14 @@ codec-encode → ONE distributed append of values → version row committed
 *after* values land (fixing the orphan-version bug, main.py:216 vs 224,
 while keeping observable success behavior identical).
 
-Serve path (reference main.py:249-336): ONE plan instead of the reference's
-N+1 loop —
-
-    feature_values ⋈ broadcast(feature_versions ⋈ features)
-      with either version == V                  (versioned branch, B1-B3)
-      or window row_number()==1 per feature     (latest branch, B4-B5)
-    filter entity_id → pivot name→value         (B7)
-
-behind the reference-parity TTL cache (B9). The registry side of the join is
-metadata (KBs) → broadcast; the values side is partition-pruned to exactly
-the named version ids before the scan."""
+Serve path (reference main.py:249-336): which version serves is resolved
+by :meth:`Catalog.resolve_versions` — the pin ``version == V`` (B1-B3) or
+the latest active version per feature (B4-B5) — in plain Python over the
+registry rows (KBs), with no Spark job. The values read is then
+pruned to exactly those version ids before the scan. ``serve_vector`` maps
+version id → feature name in Python (B7), behind the reference-parity TTL
+cache (B9); ``serve_matrix`` runs ONE plan instead of the reference's N+1
+loop: values ⋈ broadcast(version id → name) → pivot name→value."""
 
 from __future__ import annotations
 
@@ -25,7 +22,6 @@ from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..compute.engine import compute_feature, rewrap_executor_computation_error
@@ -99,7 +95,7 @@ class FeatureStore:
         )
 
         # two-phase commit: reserve the id as 'pending' (invisible to the
-        # latest-active serving window), write the values, then flip to
+        # latest-active serving resolution), write the values, then flip to
         # 'active' — neither an exception nor a crash between steps can
         # expose a version without values (§1.4/§1.5 orphan bug, fixed)
         row = self.catalog.create_version(feature_id, version, metadata, status="pending")
@@ -129,7 +125,7 @@ class FeatureStore:
         """Crash recovery: a writer that died between reserving a version id
         ('pending') and flipping it to 'active' leaves behind a pending row
         and possibly partial value files. Both are invisible to serving (the
-        latest-active window filters on status), but they block re-computing
+        latest-active resolution filters on status), but they block re-computing
         the same version string and the partial files waste storage. Run at
         service startup — any pending row seen then belongs to a dead writer
         (live writers hold pending only inside compute_version). Drops the
@@ -170,63 +166,6 @@ class FeatureStore:
         return recovered
 
     # -- serve path --------------------------------------------------------
-
-    def _resolved_versions(self, version: str | None, as_of=None) -> DataFrame:
-        """(feature_id, feature_name, feature_version_id) for the requested
-        pin, or latest-active per feature via ONE window plan (B4).
-
-        ``as_of`` pins the RESOLUTION, not just the values read: versions
-        not yet SERVABLE at the instant (activated_at > as_of — activation
-        time, not creation time, so a version in-flight during the export,
-        created-pending before but activated after, is excluded too) are
-        invisible, so a later-activated v2 cannot hijack latest-per-feature
-        and turn a reproduced export's column all-NULL (its value segments
-        would be filtered by the storage snapshot anyway). Rows without
-        activated_at (a version that went pending → deprecated) coalesce
-        to computed_at; rows with NEITHER timestamp stay visible
-        (always-visible beats silently dropping a feature from a replayed
-        export). Deprecation after the instant is not
-        reconstructed — status transitions other than activation are not
-        timestamped in the catalog."""
-        versions = self.catalog.df(self.spark, "feature_versions")
-        if as_of is not None:
-            from datetime import datetime, timezone
-
-            boundary = datetime.fromtimestamp(
-                self.store._as_of_seconds(as_of), timezone.utc
-            ).strftime("%Y-%m-%d %H:%M:%S.%f")
-            # timestamps are catalog._now()'s fixed-width UTC format —
-            # lexical comparison is chronological within the format
-            servable_at = F.coalesce(F.col("activated_at"), F.col("computed_at"))
-            versions = versions.filter(
-                servable_at.isNull() | (servable_at <= boundary)
-            )
-        features = self.catalog.df(self.spark, "features").select(
-            F.col("id").alias("feature_id_"), F.col("name").alias("feature_name")
-        )
-        if version is not None:
-            # an explicit pin may read deprecated/archived versions (a
-            # historical read) but NEVER 'pending': a pending row is an
-            # in-flight write (two-phase commit, catalog.py) — serving it
-            # would return, and cache for the TTL, data for a version
-            # that recovery may delete moments later
-            v = versions.filter(
-                (F.col("version") == version) & (F.col("status") != "pending")
-            )
-        else:
-            w = W.partitionBy("feature_id").orderBy(
-                F.desc("computed_at"), F.desc("id")  # deterministic tie-break
-            )
-            v = (
-                versions.filter(F.col("status") == "active")
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-            )
-        return v.join(
-            features, v.feature_id == features.feature_id_
-        ).select(
-            "feature_id", "feature_name", F.col("id").alias("feature_version_id"), "version"
-        )
 
     def serve_vector(
         self,
@@ -275,33 +214,33 @@ class FeatureStore:
             # an unknown entity (B8) — not a parquet path error
             raise NotFoundError(f"No feature values found for entity '{entity_id}'")
 
-        resolved = self._resolved_versions(version)
-        if feature_names:
-            resolved = resolved.filter(F.col("feature_name").isin(feature_names))  # B3
-
-        # resolve the version ids driver-side first (registry metadata, KBs)
-        # so the values read opens ONLY those versions' manifested files —
-        # with thousands of versions in the store, a serve touching two
+        # the values read opens ONLY the resolved versions' manifested files
+        # — with thousands of versions in the store, a serve touching two
         # features reads two versions' files, not the store's
-        vids = [r["feature_version_id"] for r in resolved.select("feature_version_id").collect()]
-        if not vids:
+        name_of = {
+            vid: name
+            for _fid, name, vid, _v in self.catalog.resolve_versions(
+                version, feature_names=feature_names  # B3
+            )
+        }
+        if not name_of:
             raise NotFoundError(f"No feature values found for entity '{entity_id}'")
         # entity_ids prunes at the MANIFEST: files whose recorded entity
         # range excludes this id are never opened (the row filter below
         # still applies — pruning only shrinks the scan)
-        values = self.store.values_for_versions(
-            vids, entity_ids=[str(entity_id)]
-        ).filter(F.col("entity_id") == entity_id)  # B2
         rows = (
-            values.join(F.broadcast(resolved), "feature_version_id")  # B1
-            .select("feature_name", "value")
+            self.store.values_for_versions(sorted(name_of), entity_ids=[entity_id])
+            .filter(F.col("entity_id") == entity_id)  # B2
+            .select("feature_version_id", "value")
             .collect()
         )
         if not rows:
             raise NotFoundError(  # B8, main.py:312-316
                 f"No feature values found for entity '{entity_id}'"
             )
-        feats = {r["feature_name"]: decode_value_py(r["value"]) for r in rows}  # B6
+        feats = {  # B1, B6
+            name_of[r["feature_version_id"]]: decode_value_py(r["value"]) for r in rows
+        }
         vec = FeatureVector(
             entity_id=entity_id,
             features=feats,
@@ -340,19 +279,26 @@ class FeatureStore:
         the list into the store read (manifest-level entity-range file
         skipping + a row filter) — the incremental-sync path recomputes K
         changed vectors by opening ~K files, not the version."""
-        if not self.store.exists():
+        as_of_s = self.store._as_of_seconds(as_of) if as_of is not None else None
+        resolved = self.catalog.resolve_versions(version, as_of_s, feature_names)
+        return self._matrix(resolved, as_of, preserve_stored_nulls, entity_ids)
+
+    def _matrix(
+        self,
+        resolved: list[tuple[int, str, int, str]],
+        as_of,
+        preserve_stored_nulls: bool,
+        entity_ids: list[str] | None = None,
+    ) -> DataFrame:
+        """:meth:`serve_matrix` over already-resolved
+        :meth:`Catalog.resolve_versions` rows, so an operation that also
+        needs the version ids (export, sync) resolves once."""
+        if not self.store.exists() or not resolved:
             raise NotFoundError("No feature values have been written yet")
-        resolved = self._resolved_versions(version, as_of=as_of)
-        if feature_names:
-            resolved = resolved.filter(F.col("feature_name").isin(feature_names))
-        # one driver-side metadata collect resolves names AND version ids, so
-        # the matrix read opens only the resolved versions' manifested files
-        # (same pruning as serve_vector)
-        meta = resolved.select("feature_name", "feature_version_id").collect()
-        names = sorted({r["feature_name"] for r in meta})
-        vids = sorted({r["feature_version_id"] for r in meta})
-        if not vids:
-            raise NotFoundError("No feature values have been written yet")
+        # the matrix read opens only the resolved versions' manifested
+        # files (same pruning as serve_vector)
+        names = sorted({name for _fid, name, _vid, _v in resolved})
+        vids = sorted({vid for _fid, _name, vid, _v in resolved})
         values = self.store.values_for_versions(vids, as_of=as_of, entity_ids=entity_ids)
         if entity_ids is not None:  # pruning shrinks the scan; this is the answer
             values = values.filter(
@@ -362,8 +308,9 @@ class FeatureStore:
             values = values.withColumn(
                 "value", F.coalesce(F.col("value"), F.lit("null"))
             )
+        names_side = F.broadcast(self.catalog.df(self.spark, resolved))
         return (
-            values.join(F.broadcast(resolved), "feature_version_id")
+            values.join(names_side, "feature_version_id")
             .groupBy("entity_id")
             .pivot("feature_name", names)  # explicit values → no extra pass
             .agg(F.first("value"))
@@ -434,17 +381,13 @@ class FeatureStore:
         # next sync's work" (absent from the ledger below) instead of
         # maybe-included
         pin = self.store._as_of_seconds(as_of) if as_of is not None else _time.time()
-        resolved = self._resolved_versions(version, as_of=pin)
-        if feature_names:
-            resolved = resolved.filter(F.col("feature_name").isin(feature_names))
-        vids = sorted(
-            {r["feature_version_id"] for r in resolved.select("feature_version_id").collect()}
-        )
+        resolved = self.catalog.resolve_versions(version, pin, feature_names)
+        vids = sorted({vid for _fid, _name, vid, _v in resolved})
         # the sync ledger: which commits this snapshot's CONTENT covers, by
         # SEGMENT ID (not timestamp — a commit that becomes visible after a
         # timestamp window closes is lost forever under (since, now] rules;
         # an id ledger just consumes it whenever it appears, ADVICE r10).
-        # Captured BEFORE serve_matrix builds its plan: the matrix's own
+        # Captured BEFORE the matrix builds its plan: the matrix's own
         # (later) listing is a superset, so every ledgered segment is
         # guaranteed IN the data; a segment the matrix saw but the ledger
         # missed is merely re-upserted by the first sync (idempotent).
@@ -465,9 +408,7 @@ class FeatureStore:
             }
             for v in vids
         }
-        m = self.serve_matrix(
-            feature_names, version, as_of=pin, preserve_stored_nulls=True
-        )
+        m = self._matrix(resolved, pin, preserve_stored_nulls=True)
         out = m.withColumn(
             "shard", F.pmod(F.xxhash64("entity_id"), F.lit(int(n_shards)))
         )
@@ -694,17 +635,10 @@ class FeatureStore:
         with _pid_lock(_os.path.join(final, ".sync.lock"), "online snapshot sync"):
             meta = _snapshot_meta(final)
             now = _time.time()
-            resolved = self._resolved_versions(meta["version"], as_of=now)
-            if meta["feature_names"]:
-                resolved = resolved.filter(
-                    F.col("feature_name").isin(meta["feature_names"])
-                )
-            vids_now = sorted(
-                {
-                    int(r["feature_version_id"])
-                    for r in resolved.select("feature_version_id").collect()
-                }
+            resolved = self.catalog.resolve_versions(
+                meta["version"], now, meta["feature_names"]
             )
+            vids_now = sorted({vid for _fid, _name, vid, _v in resolved})
             if vids_now != [int(v) for v in meta["feature_version_ids"]]:
                 raise ValueError(
                     f"version resolution drifted since export "
@@ -817,12 +751,8 @@ class FeatureStore:
             # the version); big ones would bloat the plan as an IN-list,
             # so they row-filter via the broadcast semi-join instead
             prune = sorted(changed) if len(changed) <= 1000 else None
-            fresh = self.serve_matrix(
-                meta["feature_names"],
-                meta["version"],
-                as_of=now,
-                preserve_stored_nulls=True,
-                entity_ids=prune,
+            fresh = self._matrix(
+                resolved, now, preserve_stored_nulls=True, entity_ids=prune
             )
             if prune is None:
                 fresh = fresh.join(changed_df, "entity_id", "left_semi")

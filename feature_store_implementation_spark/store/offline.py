@@ -788,7 +788,7 @@ class OfflineStore:
         counts: dict[str, int] = {}
         for s in segs.values():
             counts.update(s.get("row_counts", {}))
-        if segs and all(f in counts for f in files):
+        if all(f in counts for f in files):
             return sum(counts[f] for f in files)
         if as_of is not None:
             return self.values_for_version_as_of(vid, as_of).count()

@@ -718,10 +718,13 @@ def test_serve_vector_reads_only_resolved_versions(spark, tmp_path):
     vec = fs.serve_vector("e1")
     assert set(vec.features) == {"f_sum", "f_cnt"}
 
-    resolved = {
-        r["feature_version_id"]
-        for r in fs._resolved_versions(None).collect()
-    }
+    sc = spark.sparkContext
+    sc.setJobGroup("resolve-versions", "must stay empty")
+    try:
+        resolved = {vid for _fid, _name, vid, _v in fs.catalog.resolve_versions()}
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("resolve-versions") == []
     assert v1.id not in resolved and v1b.id in resolved
     opened = fs.store.values_for_versions(sorted(resolved)).inputFiles()
     assert opened and not any(f"feature_version_id={v1.id}/" in p for p in opened)
@@ -909,6 +912,145 @@ def test_catalog_concurrent_instances_do_not_lose_updates(tmp_path):
     assert {v.version for v in Catalog(root).list_versions(f.id)} == {"v1", "v2"}
     with pytest.raises(ConflictError):
         b.create_version(f.id, "v1")  # committed by the other instance
+
+
+def _vrow(id, fid, version, status="active", computed=None, activated=None):
+    """A feature_versions row; timestamps are seconds past 2026-01-01
+    00:00:00 UTC in catalog._now()'s format."""
+
+    def ts(second):
+        return None if second is None else f"2026-01-01 00:00:{second:02d}.000000"
+
+    return {
+        "id": id,
+        "feature_id": fid,
+        "version": version,
+        "status": status,
+        "computed_at": ts(computed),
+        "version_metadata": None,
+        "activated_at": ts(activated),
+    }
+
+
+@pytest.mark.parametrize(
+    "versions, kwargs, expected",
+    [
+        pytest.param(  # a pin reads a deprecated row, never a pending one
+            [_vrow(1, 1, "v2", "pending", 5), _vrow(2, 2, "v2", "deprecated", 5, 5)],
+            {"version": "v2"},
+            [("f_b", 2)],
+            id="pin-skips-pending",
+        ),
+        pytest.param(
+            [_vrow(1, 1, "v1", computed=5, activated=5), _vrow(2, 1, "v2", computed=5, activated=5)],
+            {},
+            [("f_a", 2)],
+            id="latest-tie-breaks-on-higher-id",
+        ),
+        pytest.param(
+            [_vrow(1, 1, "v1", computed=5, activated=5), _vrow(2, 1, "v2")],
+            {},
+            [("f_a", 1)],
+            id="latest-null-computed-at-sorts-last",
+        ),
+        pytest.param(  # v2 was pending at the instant, activated after it
+            [_vrow(1, 1, "v1", computed=1, activated=1), _vrow(2, 1, "v2", computed=5, activated=20)],
+            {"as_of_s": 10},
+            [("f_a", 1)],
+            id="as-of-activated-at-wins-over-computed-at",
+        ),
+        pytest.param(  # pending -> deprecated rows never get activated_at
+            [_vrow(1, 1, "v1", "deprecated", computed=5), _vrow(2, 2, "v1", "deprecated", computed=20)],
+            {"as_of_s": 10, "version": "v1"},
+            [("f_a", 1)],
+            id="as-of-null-activated-at-coalesces-to-computed-at",
+        ),
+        pytest.param(
+            [_vrow(1, 1, "v1", computed=1, activated=1), _vrow(2, 1, "v2")],
+            {"as_of_s": 10, "version": "v2"},
+            [("f_a", 2)],
+            id="as-of-keeps-row-without-timestamps",
+        ),
+        pytest.param(  # f_b's latest is picked first, then the names filter
+            [
+                _vrow(1, 1, "v1", computed=1, activated=1),
+                _vrow(2, 2, "v1", computed=2, activated=2),
+                _vrow(3, 2, "v2", computed=3, activated=3),
+            ],
+            {"feature_names": ["f_b"]},
+            [("f_b", 3)],
+            id="feature-names-filter-after-resolution",
+        ),
+        pytest.param(
+            [_vrow(1, 1, "v1", computed=1, activated=1), _vrow(2, 9, "v1", computed=1, activated=1)],
+            {"version": "v1"},
+            [("f_a", 1)],
+            id="version-without-feature-row-dropped",
+        ),
+    ],
+)
+def test_resolve_versions_rules(tmp_path, versions, kwargs, expected):
+    """Catalog.resolve_versions over hand-written catalog rows (features
+    f_a = 1 and f_b = 2): plain Python, no Spark session."""
+    import json
+    from datetime import datetime, timezone
+
+    from feature_store_implementation_spark.registry.catalog import Catalog
+
+    root = tmp_path / "catalog"
+    root.mkdir()
+    features = [
+        {"id": i, "name": name, "raw_table_id": 1, "computation_logic": "SUM(x)",
+         "feature_type": "numeric", "created_at": "2026-01-01 00:00:00.000000"}
+        for i, name in ((1, "f_a"), (2, "f_b"))
+    ]
+    for table, rows in (("features", features), ("feature_versions", versions)):
+        (root / f"{table}.jsonl").write_text("".join(json.dumps(r) + "\n" for r in rows))
+    if "as_of_s" in kwargs:
+        instant = datetime(2026, 1, 1, 0, 0, kwargs["as_of_s"], tzinfo=timezone.utc)
+        kwargs = {**kwargs, "as_of_s": instant.timestamp()}
+    got = Catalog(str(root)).resolve_versions(**kwargs)
+    assert [(name, vid) for _fid, name, vid, _v in got] == expected
+
+
+def test_resolve_versions_sees_other_instance_activation(tmp_path):
+    """A reader Catalog loaded before another instance activates a newer
+    version resolves that version: resolution passes the same
+    cross-process freshness gate as every row read."""
+    from feature_store_implementation_spark.registry.catalog import Catalog
+
+    root = str(tmp_path / "catalog")
+    writer = Catalog(root)
+    t = writer.register_raw_table("t", {})
+    f = writer.create_feature("f", t.id, "SUM(x)", "numeric")
+    v1 = writer.create_version(f.id, "v1")
+    reader = Catalog(root)
+    assert [vid for _f, _n, vid, _v in reader.resolve_versions()] == [v1.id]
+
+    v2 = writer.create_version(f.id, "v2", status="pending")
+    writer.set_version_status(v2.id, "active")
+    assert [vid for _f, _n, vid, _v in reader.resolve_versions()] == [v2.id]
+
+
+def test_compute_version_refuses_version_created_by_other_instance(spark, tmp_path, monkeypatch):
+    """A serving instance's compute_version must see a version another
+    instance created after it started, and refuse before computing: the
+    uniqueness pre-check reads fresh rows."""
+    from feature_store_implementation_spark.serving import vectors
+
+    root = str(tmp_path / "fs")
+    first = vectors.FeatureStore(spark, root)
+    t = first.register_raw_table("t", {"required_columns": ["id", "amount"]})
+    f = first.create_feature("f", t.id, "SUM(amount)", "numeric")
+    second = vectors.FeatureStore(spark, root)  # loaded before the version exists
+    first.catalog.create_version(f.id, "v1")
+
+    def must_not_run(*args, **kwargs):
+        raise AssertionError("compute_feature ran for a taken version")
+
+    monkeypatch.setattr(vectors, "compute_feature", must_not_run)
+    with pytest.raises(ConflictError):
+        second.compute_version(f.id, "v1", [{"id": "e1", "amount": 1.0}])
 
 
 # ---------------------------------------------------------------------------
@@ -1716,6 +1858,7 @@ def test_count_for_version_is_metadata_only_and_exact(spark, tmp_path):
 
     store._read_files = poisoned
     assert store.count_for_version(4) == 98
+    assert store.count_for_version(5) == 0  # never written: no segment
 
 
 def test_count_for_version_falls_back_on_statless_segments(spark, tmp_path):

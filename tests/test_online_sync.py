@@ -71,6 +71,35 @@ def test_sync_upserts_only_changed_shards(fs, spark, tmp_path):
     assert back == want
 
 
+def test_lookup_follows_reexport_with_new_shard_count(fs, spark, tmp_path):
+    """Lookups keep the meta and shard rows they read and trust them while
+    the routed shard's live file names are unchanged: a snapshot
+    re-exported at the same path with another shard count must route by
+    the new count, not the remembered one, and what the lookups keep
+    afterwards is the new generation only, one entry per shard
+    directory."""
+    import shutil
+
+    from feature_store_implementation_spark.serving import online_snapshot
+
+    _seed(fs)
+    out = str(tmp_path / "snap")
+    fs.export_online_snapshot(out, n_shards=2)
+    for i in range(12):
+        assert lookup_online_snapshot(out, f"e{i:02d}").features["amt"] == float(i)
+    shutil.rmtree(out)
+    fs.export_online_snapshot(out, n_shards=5)
+    for i in range(12):
+        assert lookup_online_snapshot(out, f"e{i:02d}").features["amt"] == float(i)
+    held = {
+        d: live
+        for d, (live, _) in online_snapshot._SHARDS.items()
+        if d.startswith(out + os.sep)
+    }
+    assert 0 < len(held) <= 5
+    assert held == {d: shard_live_files(d) for d in held}
+
+
 def test_sync_propagates_erasure_and_is_idempotent(fs, spark, tmp_path):
     _, v = _seed(fs)
     out = str(tmp_path / "snap")
