@@ -8671,7 +8671,7 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_snapshot_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL online-snapshot refresh, hash-checked end-to-end
-    (serving/vectors.py sync_online_snapshot): a feature over every
+    (serving/online_snapshot.py sync): a feature over every
     customer is exported as a hash-sharded snapshot; then every 5th
     subject is UPDATED (delete+append — the CDC upsert shape) and every
     7th (not also updated) ERASED; one sync consumes the change feed and

@@ -217,7 +217,7 @@ def create_app(
     @app.post("/api/v1/online-snapshots/<name>/sync")
     def sync_online_snapshot(name: str):
         """Incremental refresh from the change data feed (see
-        serving/vectors.py sync_online_snapshot): 200 with the sync
+        serving/online_snapshot.py sync): 200 with the sync
         report; 404 for an unknown snapshot; a ConflictError (400 in
         this facade's reference-parity mapping) when the snapshot needs
         a re-export (version drift, unusable feed window, churn past

@@ -479,8 +479,8 @@ class OfflineStore:
         are harmless because nothing ever waits on a specific seq. The
         one residual ordering violation is a holder whose lease was swept
         mid-span (≥300 s stall) publishing an OLD seq after newer ones —
-        the ledger keeps a FEED_LEDGER_SEQ_LAG-commit margin for exactly
-        that double-fault."""
+        the ledger keeps an online_snapshot.FEED_LEDGER_SEQ_LAG-commit
+        margin for exactly that double-fault."""
         seg_dir = self._segment_dir(version_id)
         os.makedirs(seg_dir, exist_ok=True)
         import time

@@ -827,7 +827,9 @@ def test_export_online_snapshot_staged_commit_and_debris_sweep(fs, spark, tmp_pa
     for d in (debris_old, debris_live):
         os.makedirs(d)
         open(os.path.join(d, "partial.parquet"), "w").close()
-    old = time.time() - fs.STAGING_SWEEP_AGE_S - 60
+    from feature_store_implementation_spark.serving import online_snapshot
+
+    old = time.time() - online_snapshot.STAGING_SWEEP_AGE_S - 60
     os.utime(debris_old, (old, old))
     assert not os.path.exists(out)  # the pre-check would NOT 409 — honest
 

@@ -8,6 +8,7 @@ import time
 import pytest
 
 from feature_store_implementation_spark.serving.online_snapshot import (
+    FEED_LEDGER_SEQ_LAG,
     lookup_online_snapshot,
     read_online_snapshot,
     shard_live_files,
@@ -252,7 +253,7 @@ def test_ledger_floor_prunes_but_never_loses(fs, spark, tmp_path):
         with open(p) as fh:
             docs[p] = json.load(fh)
     newest = max(docs, key=lambda p: docs[p].get("seq", 0))
-    far_seq = fs.FEED_LEDGER_SEQ_LAG + 2000
+    far_seq = FEED_LEDGER_SEQ_LAG + 2000
     docs[newest]["seq"] = far_seq
     with open(newest, "w") as fh:
         json.dump(docs[newest], fh)
@@ -268,7 +269,7 @@ def test_ledger_floor_prunes_but_never_loses(fs, spark, tmp_path):
     ent = meta["consumed_segments"][str(v.id)]
     assert not aged & set(ent["segments"])  # aged ids folded into the floor
     assert len(ent["segments"]) == 1  # only the far-seq commit stays explicit
-    assert ent["seq_floor"] >= far_seq - fs.FEED_LEDGER_SEQ_LAG
+    assert ent["seq_floor"] >= far_seq - FEED_LEDGER_SEQ_LAG
     assert lookup_online_snapshot(out, "p2").features["amt"] == 2.0
     assert lookup_online_snapshot(out, "fresh").features["amt"] == 4.0
     assert fs.sync_online_snapshot(out)["changed_entities"] == 0
@@ -395,3 +396,70 @@ def test_replayed_txn_append_fails_fast_on_live_writer(fs, spark, tmp_path):
     # with the fence free, the same replay commits exactly once
     n = fs.store.write_values(v.id, rows, txn=txn)
     assert fs.store.write_values(v.id, rows, txn=txn) == n  # short-circuit
+
+
+def _spark_jobs(spark, fn, *args, **kwargs):
+    """(fn's result, the number of Spark jobs it ran), counted in a job
+    group of its own on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_export_and_sync_spark_job_counts(fs, spark, tmp_path):
+    """One export runs 4 Spark jobs and one single-increment sync 11. Job
+    counts repeat exactly from run to run, so a change that adds a pass
+    over the data, or drops one, shows here as a changed count."""
+    _, v = _seed(fs)
+    out = str(tmp_path / "snap")
+    rows, export_jobs = _spark_jobs(
+        spark, fs.export_online_snapshot, out, n_shards=N_SHARDS
+    )
+    assert rows == 12
+    fs.store.write_values(
+        v.id,
+        spark.createDataFrame(
+            [("e03", "33.0"), ("new", "5.0")], "entity_id string, value string"
+        ),
+    )
+    rep, sync_jobs = _spark_jobs(spark, fs.sync_online_snapshot, out)
+    assert rep["changed_entities"] == 2
+    assert (export_jobs, sync_jobs) == (4, 11)
+
+
+def test_lookup_relists_when_a_sync_retires_the_listed_generation(fs, tmp_path, monkeypatch):
+    """A sync can retire the generation a lookup has just listed, before
+    the lookup opens it. The lookup lists the shard again and reads the
+    new generation instead of failing with FileNotFoundError (which the
+    online route would answer with a 404)."""
+    import shutil
+
+    import pyarrow.dataset
+
+    _seed(fs)
+    out = str(tmp_path / "snap")
+    fs.export_online_snapshot(out, n_shards=N_SHARDS)
+    real = pyarrow.dataset.dataset
+    retired = []
+
+    def dataset(source, *args, **kwargs):
+        if not retired:
+            # what a sync does between the lookup's listing and its read:
+            # rename the next generation in, delete the listed one
+            for f in source:
+                d, name = os.path.split(f)
+                shutil.copy(f, os.path.join(d, f"gen1-{name}"))
+                os.remove(f)
+                retired.append(f)
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pyarrow.dataset, "dataset", dataset)
+    assert lookup_online_snapshot(out, "e03").features["amt"] == 3.0
+    assert retired and not any(os.path.exists(f) for f in retired)
